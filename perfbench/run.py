@@ -8,8 +8,8 @@ runs whole rounds for about ``--seconds`` (at least one round), then
 checks its outputs outside the timed window.  The last line of
 standard output is one JSON object: ``correct``, ``attempted``,
 ``failed`` and ``metrics`` -- the end-to-end metrics with ``--trace 0``.
-With ``--trace 1`` four rounds run instead (traced, untraced, traced,
-untraced) and the metrics are the per-layer ones of the first.  Lines
+With ``--trace 1`` two rounds run instead (traced, then untraced) and
+the metrics are the per-layer ones of the first.  Lines
 before the JSON are a readable report (noise stamps, workload-native
 figures and tails).
 """
@@ -35,25 +35,8 @@ DRIVER_MEM = "4g"
 #: end-to-end metric -> unit (BENCHMARK.json holds direction and bound)
 END_TO_END = {
     "setup_s": "s",
-    "op_s.p50": "s",
-    "ops_per_s": "1/s",
+    "op_cpu_s.mean": "s",
 }
-
-
-def cpu_stat() -> tuple[int, int]:
-    """(total, steal) jiffies from the aggregate line of /proc/stat."""
-    with open("/proc/stat") as f:
-        fields = [int(x) for x in f.readline().split()[1:]]
-    return sum(fields[:8]), fields[7]
-
-
-def rss_mb(pid: int | str = "self") -> float:
-    """Peak resident set (VmHWM) of a process, in MB."""
-    with open(f"/proc/{pid}/status") as f:
-        for line in f:
-            if line.startswith("VmHWM:"):
-                return int(line.split()[1]) / 1024.0
-    return 0.0
 
 
 def parse_args(argv):
@@ -100,6 +83,7 @@ def main(argv=None) -> int:
 
 def run(args, cores: int, work: str, workload_cls) -> int:
     from mirror_lake_kusto_spark.session import build_session
+    from proc import cpu_stat, engine_cpu_s, rss_mb
 
     load0 = os.getloadavg()
     cpu0 = cpu_stat()
@@ -127,7 +111,8 @@ def run(args, cores: int, work: str, workload_cls) -> int:
         spark.range(0, 100_000, 1, cores).selectExpr("sum(id)").collect()
         warmup_s = time.perf_counter() - t0
 
-        wl = workload_cls(spark, os.path.join(work, "wl"), args.seed)
+        wl = workload_cls(spark, os.path.join(work, "wl"), args.seed,
+                          cpu_clock=lambda: engine_cpu_s(jvm_pid))
         wl.setup()
         setup_s = time.perf_counter() - T_START
 
@@ -153,11 +138,11 @@ def run(args, cores: int, work: str, workload_cls) -> int:
 
         metrics, units = finish(wl, peak), layers.PER_LAYER
     else:
-        ops = sum(wl.round_ops)
+        cpu_s = wl.samples["op_cpu_s"]
         metrics = {
             "setup_s": setup_s,
-            "op_s.p50": _median(wl.samples["op_s"]),
-            "ops_per_s": ops / sum(wl.round_walls),
+            # 0 only when every operation failed (the run is then incorrect)
+            "op_cpu_s.mean": statistics.fmean(cpu_s) if cpu_s else 0.0,
         }
         units = END_TO_END
     cpu1 = cpu_stat()
@@ -173,38 +158,13 @@ def run(args, cores: int, work: str, workload_cls) -> int:
     return 0
 
 
-def descendants(pid: int) -> set[int]:
-    """Every live process below ``pid`` (Spark's Python workers)."""
-    parent = {}
-    for entry in os.listdir("/proc"):
-        if not entry.isdigit():
-            continue
-        try:
-            with open(f"/proc/{entry}/stat") as f:
-                parent[int(entry)] = int(f.read().rsplit(")", 1)[1].split()[1])
-        except (OSError, IndexError, ValueError):
-            continue
-    found, frontier = set(), {pid}
-    while frontier:
-        frontier = {p for p, pp in parent.items() if pp in frontier} - found
-        found |= frontier
-    return found
-
-
-def _running(pid: int) -> bool:
-    """True while ``pid`` exists and has not exited (a zombie has)."""
-    try:
-        with open(f"/proc/{pid}/stat") as f:
-            return f.read().rsplit(")", 1)[1].split()[0] != "Z"
-    except (OSError, IndexError):
-        return False
-
-
 def stop_spark(spark, timeout_s: float = 60.0) -> None:
     """Stop the session, end the JVM (it exits when its stdin closes)
     and wait until it and its Python workers are gone, so no process
     outlives the run."""
     from pyspark import SparkContext
+
+    from proc import descendants, running
 
     gateway = SparkContext._gateway
     proc = getattr(gateway, "proc", None)
@@ -216,26 +176,20 @@ def stop_spark(spark, timeout_s: float = 60.0) -> None:
     proc.stdin.close()
     proc.wait(timeout=timeout_s)
     deadline = time.monotonic() + timeout_s
-    while any(_running(p) for p in children):
+    while any(running(p) for p in children):
         if time.monotonic() > deadline:
             raise TimeoutError(f"Spark worker processes still running: {sorted(children)}")
         time.sleep(0.05)
 
 
-def _median(values):
-    """Median of the samples; 0 when every operation failed (the run is
-    then reported incorrect)."""
-    return statistics.median(values) if values else 0.0
-
-
 def traced(wl, cores, eventlog_dir, session):
-    """Rounds traced, untraced, traced, untraced.  The first runs right
+    """A traced round, then an untraced one.  The traced round runs right
     after set-up, like the timed round of an untraced run, and gives the
-    per-layer metrics.  Rounds keep getting faster as the JIT compiles
-    more, so the tracing overhead compares the second traced round with
-    the mean of the untraced rounds on either side of it.  Returns a
-    function of the checked workload giving the per-layer metrics (the
-    event log can only be read once the session has stopped)."""
+    per-layer metrics; the tracing overhead compares the two rounds'
+    wall times.  Rounds still get a little faster as the JIT compiles
+    more, so the overhead reads somewhat high.  Returns a function of
+    the checked workload giving the per-layer metrics (the event log can
+    only be read once the session has stopped)."""
     import eventlog
     import layers
     from spans import Tracer
@@ -259,8 +213,6 @@ def traced(wl, cores, eventlog_dir, session):
     traced_s = timed_round(tracer)
     w1 = time.time() * 1000
     untraced_s = timed_round(None)
-    retraced_s = timed_round(Tracer())
-    untraced_s = (untraced_s + timed_round(None)) / 2
 
     def finish(wl, peak_rss_mb):
         summary = eventlog.summarize(eventlog.read_events(eventlog_dir), w0, w1, cores)
@@ -269,7 +221,7 @@ def traced(wl, cores, eventlog_dir, session):
             "mirror.space_amp": wl.space_amp,
             "memory.peak_rss_mb": peak_rss_mb,
             "trace.wall_s": traced_s,
-            "trace.overhead_pct": 100.0 * (retraced_s / untraced_s - 1.0),
+            "trace.overhead_pct": 100.0 * (traced_s / untraced_s - 1.0),
         })
         return layers.metrics(tracer, summary, extra)
 
@@ -287,6 +239,8 @@ def print_report(args, wl, cores, load0, steal, peak_rss_mb) -> None:
     print(f"# rounds={len(wl.round_walls)} ops={sum(wl.round_ops)} "
           f"attempted={wl.attempted} failed={wl.failed} "
           f"error_rate={wl.failed / max(1, wl.attempted):.4f}")
+    if wl.round_walls:
+        print(f"# ops_per_s [1/s]: {sum(wl.round_ops) / sum(wl.round_walls):.4f} (wall)")
     for name, (unit, values) in wl.report().items():
         if not values:
             continue

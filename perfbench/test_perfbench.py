@@ -155,3 +155,19 @@ def test_benchmark_json_matches_the_metrics_the_runs_print():
     assert {m["name"]: m["unit"] for m in bench["per_layer"]} == layers.PER_LAYER
     assert all(m["bound"] <= 0.25 for m in bench["end_to_end"])
     assert {"mirror_cdc", "query_mix"} <= {w["name"] for w in bench["workloads"]}
+
+
+# -- engine CPU clock ----------------------------------------------------------
+
+def test_engine_cpu_counts_a_worker_that_exited_and_was_waited_for():
+    import subprocess
+
+    import proc
+
+    worker = subprocess.Popen([sys.executable, "-c",
+                               "import time\nt = time.process_time()\n"
+                               "while time.process_time() - t < 0.5: pass"])
+    before = proc.engine_cpu_s(worker.pid)
+    worker.wait(timeout=30)
+    after = proc.engine_cpu_s(worker.pid)  # the worker is gone: counted in ours
+    assert after - before >= 0.3

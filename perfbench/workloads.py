@@ -52,11 +52,14 @@ class Workload:
     #: what one timed operation is, for the report
     op = ""
 
-    def __init__(self, spark, work: str, seed: int):
+    def __init__(self, spark, work: str, seed: int, cpu_clock):
         self.spark = spark
         self.work = work
         self.seed = seed
-        #: named samples of the timed rounds (``op_s`` is the e2e one)
+        #: CPU seconds used so far by the engine's processes
+        self.cpu = cpu_clock
+        #: named samples of the timed rounds (``op_cpu_s`` gives the
+        #: end-to-end metrics, ``op_s`` is its wall time)
         self.samples: dict[str, list[float]] = defaultdict(list)
         self.round_walls: list[float] = []
         self.round_ops: list[int] = []
@@ -79,6 +82,18 @@ class Workload:
 
     def report(self) -> dict[str, object]:
         return {}
+
+    def warm_up(self, **round_args) -> None:
+        """One untimed round at the end of set-up, its figures dropped,
+        so the timed rounds find the JIT and Spark's code generation
+        warm: an operation's first run compiles, and takes about twice
+        the CPU of its later runs."""
+        self.round(**round_args)
+        self.samples.clear()
+        self.round_walls.clear()
+        self.round_ops.clear()
+        self.errors.clear()
+        self.attempted = self.failed = 0
 
 
 class _Mirror(Workload):
@@ -130,9 +145,10 @@ class MirrorBackfill(_Mirror):
         pipeline = MirrorPipeline(self.spark, self.source, target, state,
                                   max_items_per_batch=self.BATCH_ITEMS)
         self.last = (pipeline, state)
-        batches = []
+        batches, cpu_s = [], []
         t0 = perf()
         while True:
+            c0 = self.cpu()
             b0 = perf()
             try:
                 out = pipeline.run_once()
@@ -145,10 +161,12 @@ class MirrorBackfill(_Mirror):
             if out["status"] == "up-to-date":
                 break
             batches.append(perf() - b0)
+            cpu_s.append(self.cpu() - c0)
         wall = perf() - t0
         if record:
             self.attempted += len(batches)
             self.samples["op_s"] += batches
+            self.samples["op_cpu_s"] += cpu_s
             self.samples["rows_per_s"].append(self.ROWS / wall)
             self.round_walls.append(wall)
             self.round_ops.append(len(batches))
@@ -162,7 +180,8 @@ class MirrorBackfill(_Mirror):
 
     def report(self):
         return {"rows_per_s": ("rows/s", self.samples["rows_per_s"]),
-                "batch_s": ("s", self.samples["op_s"])}
+                "batch_s": ("s", self.samples["op_s"]),
+                "batch_cpu_s": ("s", self.samples["op_cpu_s"])}
 
 
 class MirrorCdc(_Mirror):
@@ -176,10 +195,10 @@ class MirrorCdc(_Mirror):
 
     name = "mirror_cdc"
     op = "source commit + run_once"
-    ROWS = 20_000
-    MONTHS = 12
-    COMMITS = 20
-    CHECKPOINT_EVERY = 10
+    ROWS = 8_000
+    MONTHS = 4
+    COMMITS = 8
+    CHECKPOINT_EVERY = 4
     KEYS_PER_OP = 20
     APPEND_ROWS = 200
     SCHEDULE = ("append", "delete", "update", "merge",
@@ -197,6 +216,7 @@ class MirrorCdc(_Mirror):
         gen.write_delta_source(source, rows, self.COMMITS, self.CHECKPOINT_EVERY)
         MirrorPipeline(self.spark, source, target, state, on_dv="materialize").run_until_idle()
         shutil.copytree(self.live, self.pristine)
+        self.warm_up(sync_each=False)
 
     @staticmethod
     def _dirs(root: str) -> tuple[str, str, str]:
@@ -207,7 +227,10 @@ class MirrorCdc(_Mirror):
         return digest(self.spark.createDataFrame(tbl.select(gen.SOURCE_COLUMNS)),
                       gen.SOURCE_COLUMNS)
 
-    def round(self) -> None:
+    def round(self, sync_each: bool = True) -> None:
+        """One round of SCHEDULE from the pristine copy.  With
+        ``sync_each`` off (the set-up's warm-up) the mirror runs once
+        after the last commit instead of after each."""
         shutil.rmtree(self.live)
         shutil.copytree(self.pristine, self.live)
         source, target, state = self._dirs(self.live)
@@ -223,16 +246,19 @@ class MirrorCdc(_Mirror):
             if kind in ("append", "merge", "merge_dv"):
                 next_key += self.APPEND_ROWS
             self.attempted += 1
+            c0 = self.cpu()
             t0 = perf()
             try:
                 call()
                 t1 = perf()
-                pipeline.run_once()
+                if sync_each:
+                    pipeline.run_once()
             except Exception as exc:  # noqa: BLE001 — counted, round goes on
                 wall += perf() - t0
                 self.fail(kind, exc)
                 continue
             t2 = perf()
+            self.samples["op_cpu_s"].append(self.cpu() - c0)
             wall += t2 - t0
             apply()
             if self.tracer is not None and kind != "append":
@@ -241,6 +267,8 @@ class MirrorCdc(_Mirror):
             self.samples["commit_s"].append(t1 - t0)
             self.samples["batch_s"].append(t2 - t1)
             self.samples[f"fresh_s.{kind}"].append(t2 - t0)
+        if not sync_each:
+            pipeline.run_until_idle()
         self.round_walls.append(wall)
         self.round_ops.append(len(self.SCHEDULE))
 
@@ -287,6 +315,7 @@ class MirrorCdc(_Mirror):
 
     def report(self):
         out = {"fresh_s": ("s", self.samples["op_s"]),
+               "fresh_cpu_s": ("s", self.samples["op_cpu_s"]),
                "commit_s": ("s", self.samples["commit_s"]),
                "batch_s": ("s", self.samples["batch_s"])}
         for kind in dict.fromkeys(self.SCHEDULE):
@@ -338,11 +367,15 @@ class QueryMix(Workload):
             cols = df.columns
             self.results[q.name] = (sorted(cols), len(rows),
                                     value_hash(cols, [[r[c] for c in cols] for r in rows]))
+        # the timed operation ends in a noop write, not a collect; after
+        # the collecting pass alone the first timed round still took half
+        # again the CPU of the rounds after it
+        self.warm_up(passes=1)
 
-    def round(self) -> None:
+    def round(self, passes: int = PASSES) -> None:
         wall = 0.0
         order = np.concatenate([self.rng.permutation(len(self.queries))
-                                for _ in range(self.PASSES)])
+                                for _ in range(passes)])
         for i in order:
             q = self.queries[i]
             module = q.fn.__module__.rsplit(".", 1)[-1]
@@ -350,6 +383,7 @@ class QueryMix(Workload):
             # otherwise serve every later call of the query from cache
             self.spark.catalog.clearCache()
             self.attempted += 1
+            c0 = self.cpu()
             t0 = perf()
             try:
                 df = q.fn(self.spark, self.data)
@@ -360,6 +394,7 @@ class QueryMix(Workload):
                 self.fail(q.name, exc)
                 continue
             t2 = perf()
+            self.samples["op_cpu_s"].append(self.cpu() - c0)
             wall += t2 - t0
             self.samples["op_s"].append(t2 - t0)
             self.samples[f"query_s.{q.name}"].append(t2 - t0)
@@ -393,7 +428,8 @@ class QueryMix(Workload):
             con.close()
 
     def report(self):
-        out = {"query_s": ("s", self.samples["op_s"])}
+        out = {"query_s": ("s", self.samples["op_s"]),
+               "query_cpu_s": ("s", self.samples["op_cpu_s"])}
         for name in self.QUERIES:
             out[f"query_s.{name}"] = ("s", self.samples[f"query_s.{name}"])
         return out
