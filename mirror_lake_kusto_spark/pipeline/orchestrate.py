@@ -15,12 +15,12 @@ DeltaTableOrchestration.ProcessTransactionBatchAsync
                 user's creation-time expression evaluated over distinct
                 partition tuples in ONE Spark job (J1/O5/O7;
                 BlobAnalysisOrchestration.cs:67-244);
-4. stage+load — read surviving blobs grouped by partition tuple with
-                partition constants injected (D5/O6/A7), add lineage
-                columns (H5), ONE atomic sink commit carrying a Delta
-                ``txn`` action for idempotence (K5/O11/I3 — the
-                staging-table + `.move extents` dance collapses into
-                write-then-commit);
+4. stage+load — read surviving blobs in ONE ``read_files`` scan with
+                typed partition constants (D5/O6/A7) and lineage
+                columns (H5) joined per file, ONE atomic sink commit
+                carrying a Delta ``txn`` action for idempotence
+                (K5/O11/I3 — the staging-table + `.move extents` dance
+                collapses into write-then-commit);
 5. removes    — each remove joins its historical add (C3,
                 BlobLoadingOrchestration.cs:96-115): skipped add =>
                 skipped remove; otherwise one `.delete`-records commit
@@ -36,21 +36,20 @@ rows of already-deleted blob paths matches nothing).
 
 Scale: all data movement is executor-side (`spark.read.parquet` ->
 `sink.append`); the driver handles only the batch's action metadata.
-Lineage column MLK_BlobPath (TableDefinition.cs:16,58-69) is
-``input_file_name()`` at scan time — zero-cost, no shuffle.
+Lineage column MLK_BlobPath (TableDefinition.cs:16,58-69) is a per-file
+value of that scan, joined from the batch's file list — no shuffle.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
 import json
-import os
 import time
 from typing import Any
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import StringType, StructType
 
 from ..sources import delta_log as DL
 from ..sources.delta_sink import DeltaSink
@@ -1044,14 +1043,14 @@ class MirrorPipeline:
         return out
 
     def _stage_and_load(self, items: list[dict], end_tx: int) -> int:
-        """Read surviving add blobs (grouped per partition tuple, D5),
-        inject typed partition constants (O6/A7) + lineage columns (H5),
-        and publish with ONE idempotent atomic commit (K5/O11/I3)."""
+        """Read the surviving add blobs with ONE ``read_files`` call —
+        typed partition constants (O6/A7) and lineage columns (H5) ride
+        its per-file join, so the reference's per-partition staging
+        (D5) costs no extra scans — and publish with ONE idempotent
+        atomic commit (K5/O11/I3)."""
         todo = [i for i in items if i["action"] == "Add" and i["state"] == "Analyzed"]
         if not todo:
             return 0
-        from ..sources import fs as _fsmod
-
         app_id = self.app_id
         staging = next(
             (i for i in items if i["action"] == "StagingTable"), None
@@ -1099,182 +1098,52 @@ class MirrorPipeline:
             )
         meta = DL.latest_metadata(self.spark, self.source, upto=end_tx)
         schema = StructType.fromJson(json.loads(meta["schemaString"]))
-        type_of = {f.name: f.dataType for f in schema.fields}
-        src_conf = meta.get("configuration") or {}
         # source row tracking: carry every row's SOURCE identity into
         # the mirror as a lineage column — repacking would otherwise
         # silently strip the lineage the source guaranteed
         rt_src = (
-            str(src_conf.get("delta.enableRowTracking", "")).lower()
+            str(
+                (meta.get("configuration") or {}).get(
+                    "delta.enableRowTracking", ""
+                )
+            ).lower()
             == "true"
         )
-        src_mat_id = src_conf.get(
-            "delta.rowTracking.materializedRowIdColumnName"
-        )
-        # column-mapped source: files store PHYSICAL names; partition
-        # values recorded from add actions are keyed physical too —
-        # read physical, relabel logical right after the scan (the
-        # same normalization read_snapshot performs)
-        mapping = DL.column_mapping_of(meta)  # logical -> physical
-        log_of = {v: k for k, v in (mapping or {}).items()}
-        part_cols = {
-            log_of.get(c, c) for c in (meta.get("partitionColumns") or [])
-        }
-        # source files hold only data columns; explicit schema skips a
-        # footer-inference job per partition group
-        data_fields = [f for f in schema.fields if f.name not in part_cols]
-        data_schema = StructType(data_fields)
-        read_schema = (
-            data_schema
-            if mapping is None
-            else StructType(
-                [
-                    StructField(mapping[f.name], f.dataType, f.nullable)
-                    for f in data_fields
-                ]
-            )
-        )
-        if rt_src and src_mat_id:
-            from pyspark.sql.types import LongType
-
-            # the source's materialized row-id column is physical-only;
-            # files from before materialization null-fill
-            read_schema = StructType(
-                [
-                    *read_schema.fields,
-                    StructField(src_mat_id, LongType(), True),
-                ]
-            )
-        groups: dict[tuple, list[str]] = {}
-        for it in todo:
-            pv = tuple(
-                sorted(
-                    (log_of.get(k, k), v)
-                    for k, v in json.loads(
-                        it["partition_values"] or "{}"
-                    ).items()
-                )
-            )
-            groups.setdefault(pv, []).append(it["blob_path"])
-        # widened columns Spark cannot promote natively at scan
-        # (byte/short era under decimal): era-split by sniffed
-        # physical type, cast right after the scan — same pass
-        # read_snapshot uses
-        problem_cols = {
-            (mapping[f] if mapping else f): type_of[f]
-            for f in DL.legacy_promote_cols(
-                json.loads(meta["schemaString"])["fields"]
-            )
-        }
-        parts: list[DataFrame] = []
-        dv_parts: list[DataFrame] = []
-        dv_files: list[dict] = []
-
-        def stage_scan(era_paths, variant_schema, cast_cols, with_dv, pv, rel_subset):
-            df = self.spark.read.schema(variant_schema).parquet(*era_paths)
-            for c in cast_cols:
-                df = df.withColumn(c, F.col(c).cast(problem_cols[c]))
-            extra: list[str] = []
-            if with_dv:
-                # merge-on-read source file: capture (file, physical
-                # row index) at scan so the bitmap anti-join below
-                # keeps only SURVIVING rows.  Distinct column names
-                # from the row-tracking __mlk_ridx, which must keep
-                # the physical index after the DV filter
-                df = df.withColumns(
-                    {
-                        "__mlk_dvfile": _fsmod.spark_scan_path(
-                            F.input_file_name()
-                        ),
-                        "__mlk_dvridx": F.col("_metadata.row_index"),
-                    }
-                )
-                extra = ["__mlk_dvfile", "__mlk_dvridx"]
-            if mapping is not None:
-                df = df.select(
-                    *[
-                        F.col(mapping[f.name]).alias(f.name)
-                        for f in data_fields
-                    ],
-                    *extra,
-                )
-            for col_name, raw in pv:
-                df = df.withColumn(
-                    col_name, F.lit(raw).cast(type_of[col_name])
-                )
-            keep = [f.name for f in schema.fields]
-            if rt_src and src_mat_id:
-                keep.append(src_mat_id)
-            df = df.select(*keep, *extra).withColumns(
-                {
-                    "MLK_BlobPath": _fsmod.spark_scan_path(
-                        F.input_file_name()
-                    ),
-                    "MLK_BatchTxId": F.lit(end_tx).cast("long"),
-                }
-            )
-            if rt_src:
-                df = df.withColumn(
-                    "__mlk_ridx", F.col("_metadata.row_index")
-                )
-            if with_dv:
-                dv_parts.append(df)
-                dv_files.extend(
-                    {"path": p, "deletionVector": dv_descs[p]}
-                    for p in rel_subset
-                )
-            else:
-                parts.append(df)
-
-        for pv, rel_paths in groups.items():
-            for subset, with_dv in (
-                ([p for p in rel_paths if p not in dv_descs], False),
-                ([p for p in rel_paths if p in dv_descs], True),
-            ):
-                if not subset:
-                    continue
-                abs_of = {
-                    os.path.join(self.source, p): p for p in subset
-                }
-                if problem_cols:
-                    era_groups = DL.physical_read_groups(
-                        sorted(abs_of), read_schema, problem_cols
-                    )
-                else:
-                    era_groups = [(sorted(abs_of), read_schema, [])]
-                for era_paths, variant_schema, cast_cols in era_groups:
-                    stage_scan(
-                        era_paths,
-                        variant_schema,
-                        cast_cols,
-                        with_dv,
-                        pv,
-                        [abs_of[p] for p in era_paths],
-                    )
-        if dv_parts:
-            dv_out = dv_parts[0]
-            for p in dv_parts[1:]:
-                dv_out = dv_out.unionByName(p)
-            # one bitmap anti-join across every DV'd file in the batch
-            # (KB-scale compressed bitmaps driver-side, exploded
-            # executor-side, broadcast under 10M deleted rows — the
-            # same pass read_snapshot applies)
-            parts.append(
-                DL._apply_deletion_vectors(
-                    self.spark,
-                    self.source,
-                    dv_out,
-                    dv_files,
-                    file_col="__mlk_dvfile",
-                    ridx_col="__mlk_dvridx",
-                )
-            )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        extra_actions: list[dict] = []
+        files = [
+            {
+                "path": it["blob_path"],
+                "partitionValues": json.loads(it["partition_values"] or "{}"),
+                "deletionVector": dv_descs.get(it["blob_path"]),
+                "MLK_BlobPath": self._lineage_path(it["blob_path"]),
+            }
+            for it in todo
+        ]
         if rt_src:
-            out = self._attach_source_row_ids(out, todo, end_tx, src_mat_id)
+            base = {
+                f["path"]: f.get("baseRowId")
+                for f in DL.snapshot_files(
+                    self.spark, self.source, upto=end_tx
+                )
+            }
+            for f in files:
+                f["baseRowId"] = base.get(f["path"])
+        # ONE read over the batch's blobs: partition constants, the
+        # lineage path and the source row id ride the per-file join;
+        # DV'd blobs yield their surviving rows only
+        out = DL.read_files(
+            self.spark,
+            self.source,
+            files,
+            meta,
+            row_ids=rt_src,
+            constants={"MLK_BlobPath": StringType()},
+        ).withColumn("MLK_BatchTxId", F.lit(end_tx).cast("long"))
+        lineage = ["MLK_BlobPath", "MLK_BatchTxId"]
+        if rt_src:
+            out = out.withColumnRenamed("_row_id", "MLK_SourceRowId")
+            lineage.append("MLK_SourceRowId")
+        out = out.select(*[f.name for f in schema.fields], *lineage)
+        extra_actions: list[dict] = []
         # preserve the source's app-domain metadata (PROTOCOL.md
         # "Domain Metadata"): a consumer of the MIRROR must see the
         # domains the SOURCE carried.  delta.* domains are per-table
@@ -1299,37 +1168,6 @@ class MirrorPipeline:
         for it in todo:
             it["state"] = "Staged"
         return len(todo)
-
-    def _attach_source_row_ids(self, out, todo, end_tx, src_mat_id):
-        """Lineage column ``MLK_SourceRowId``: the source's stable row
-        id for every mirrored row — materialized value when the source
-        rewrote the file, else ``add.baseRowId + physical row index``.
-        The per-file id frame is batch-metadata-sized and broadcast;
-        the data never shuffles."""
-        from ..sources import fs as _fsmod
-
-        want = {i["blob_path"] for i in todo}
-        id_rows = [
-            (
-                _fsmod.data_path_spelling(self.source, f["path"]),
-                f.get("baseRowId"),
-            )
-            for f in DL.snapshot_files(self.spark, self.source, upto=end_tx)
-            if f["path"] in want
-        ]
-        ids = F.broadcast(
-            self.spark.createDataFrame(
-                id_rows, "MLK_BlobPath string, __mlk_base long"
-            )
-        )
-        out = out.join(ids, "MLK_BlobPath", "left")
-        fresh = F.col("__mlk_base") + F.col("__mlk_ridx")
-        src_id = (
-            F.coalesce(F.col(src_mat_id), fresh) if src_mat_id else fresh
-        )
-        return out.withColumn("MLK_SourceRowId", src_id).drop(
-            "__mlk_base", "__mlk_ridx", *( [src_mat_id] if src_mat_id else [])
-        )
 
     def _check_span_has_no_dvs(self, hwm: int, end_tx: int) -> None:
         """Raw-commit scan of (hwm, end_tx] for deletion-vector adds:
@@ -1578,15 +1416,15 @@ class MirrorPipeline:
                 )
 
     def _lineage_path(self, rel: str) -> str:
-        """The MLK_BlobPath spelling for a source-relative blob path —
-        must match the ingestion column byte-for-byte: full path with a
-        ``file:`` scheme stripped (other schemes kept) and percent-
-        encoding undone, exactly what
+        """The MLK_BlobPath value of a source-relative blob path —
+        staging writes it and removes key on it: the full path as the
+        scan opened it, ``file:`` scheme stripped (other schemes kept),
+        byte-identical to the
         ``url_decode(regexp_replace(input_file_name(), '^file:(//)?', ''))``
-        records at scan time."""
+        spelling earlier mirrors recorded at scan time."""
         from ..sources import fs as _fsmod
 
-        return _fsmod.data_path_spelling(self.source, rel)
+        return _fsmod.scan_path_spelling(self.source, rel)
 
     def _apply_removes(self, items: list[dict]) -> int:
         """C3 + K6: match removes to their historical adds; a skipped

@@ -31,6 +31,7 @@ import os
 import re
 from typing import Any
 
+import pyarrow as pa
 import pyarrow.parquet as _pq
 import pyspark.sql.functions as F
 
@@ -39,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
+    DataType,
     LongType,
     MapType,
     StringType,
@@ -1360,11 +1362,11 @@ def read_snapshot(
     timestamp=None,
     row_ids: bool = False,
 ) -> DataFrame:
-    """Current table contents.  Files are read grouped by partition
-    tuple with the partition values injected as typed literal columns —
-    the reference's ConstValue ingestion mapping (A7/O6,
-    BlobStagingOrchestration.cs:291-308): partition columns are never
-    stored in the data files.
+    """Current table contents: log replay, pruning, then ONE
+    :func:`read_files` over the surviving add actions — partition
+    columns are never stored in the data files and come back as the
+    reference's ConstValue ingestion mapping (A7/O6,
+    BlobStagingOrchestration.cs:291-308).
 
     ``partition_predicate`` (SQL over partition columns only) prunes
     whole partition groups BEFORE any data file is opened — classic
@@ -1390,7 +1392,6 @@ def read_snapshot(
         upto = resolve_timestamp(table_path, timestamp)
     files = snapshot_files(spark, table_path, upto=upto)
     meta = latest_metadata(spark, table_path, upto=upto)
-    mat_id = mat_rcv = None
     if row_ids:
         conf = (meta or {}).get("configuration") or {}
         if str(conf.get("delta.enableRowTracking", "")).lower() != "true":
@@ -1398,13 +1399,9 @@ def read_snapshot(
                 f"{table_path}: row_ids=True needs row tracking "
                 "(delta.enableRowTracking) on the table"
             )
-        mat_id = conf.get("delta.rowTracking.materializedRowIdColumnName")
-        mat_rcv = conf.get(
-            "delta.rowTracking.materializedRowCommitVersionColumnName"
-        )
     mapping = column_mapping_of(meta)  # logical -> physical, or None
-    if mapping is not None:
-        # normalize to LOGICAL names up front: add.partitionValues (and
+    if mapping is not None and partition_predicate is not None:
+        # the predicate speaks LOGICAL names; add.partitionValues (and
         # metaData.partitionColumns in some writers) are keyed by
         # physical name under column mapping
         log_of = {v: k for k, v in mapping.items()}
@@ -1427,40 +1424,8 @@ def read_snapshot(
         }
     if partition_predicate is not None and files and meta is not None:
         files = _prune_partitions(spark, files, meta, partition_predicate)
-    if predicate is not None and files and meta is not None and mapping is None:
-        # stats/bloom pruning is skipped under column mapping (stats
-        # JSON is keyed by physical names); the row filter below keeps
-        # the result exact either way — pruning is only ever advisory
-        from .bloom import prune_files_bloom
-        from .skipping import prune_files
-
-        pred_schema = StructType.fromJson(json.loads(meta["schemaString"]))
-        collated = collations_of(meta)
-        # collated columns prune collation-AWARE (round 11): stats
-        # min/max are binary-ordered, so prune_files applies the
-        # case-variant interval test on the SPARK.UTF8_LCASE family
-        # (equality/IN only) and keeps every other collation's
-        # conjuncts non-prunable; the row filter below keeps the
-        # result exact either way
-        files = prune_files(
-            files,
-            predicate,
-            pred_schema,
-            list(meta.get("partitionColumns") or []),
-            collations=collated,
-        )
-        # a Bloom sidecar (if built) additionally prunes equality/IN
-        # lookups on high-cardinality columns; advisory and stale-safe.
-        # Blooms hash raw bytes — a case VARIANT of the literal would
-        # miss — so collated columns stay outside the bloom's view
-        bloom_schema = (
-            StructType(
-                [f for f in pred_schema.fields if f.name not in collated]
-            )
-            if collated
-            else pred_schema
-        )
-        files = prune_files_bloom(table_path, files, predicate, bloom_schema)
+    if predicate is not None:
+        files = prune_by_predicate(table_path, files, meta, predicate)
     if not files or meta is None:
         return spark.createDataFrame(
             [],
@@ -1468,316 +1433,256 @@ def read_snapshot(
             if meta
             else StructType([]),
         )
-    schema = StructType.fromJson(json.loads(meta["schemaString"]))
-    part_cols = list(meta.get("partitionColumns") or [])
-    type_of = {f.name: f.dataType for f in schema.fields}
-    # files hold only the data columns (partition values live in the
-    # log); passing the schema skips a footer-inference job per group
-    data_schema = StructType([f for f in schema.fields if f.name not in part_cols])
-    # under column mapping the FILES store physical names: read with
-    # the physical schema, rename to logical right after the scan
-    read_schema = (
-        data_schema
-        if mapping is None
-        else StructType(
-            [
-                StructField(mapping[f.name], f.dataType, f.nullable)
-                for f in data_schema.fields
-            ]
-        )
-    )
-
-    dv_files = [
-        f
-        for f in files
-        if (f.get("deletionVector") or {}).get("cardinality")
-    ]
-    mat_cols = [c for c in (mat_id, mat_rcv) if c]
-    if mat_cols:
-        # the materialized row-id/commit-version columns are PHYSICAL
-        # only (never part of the logical schema): files written before
-        # materialization lack them and null-fill
-        read_schema = StructType(
-            [
-                *read_schema.fields,
-                *[StructField(c, LongType(), True) for c in mat_cols],
-            ]
-        )
-    need_identity = bool(dv_files) or row_ids
-    # columns whose widening history Spark cannot promote natively
-    # (byte/short era under a decimal logical type): era-split those
-    # scans by sniffed physical type, cast right after the scan
-    problem_cols = {
-        (mapping[c] if mapping else c): type_of[c]
-        for c in legacy_promote_cols(json.loads(meta["schemaString"])["fields"])
-    }
-    groups: dict[tuple, list[str]] = {}
-    for f in files:
-        key = tuple(sorted((f["partitionValues"] or {}).items()))
-        groups.setdefault(key, []).append(
-            _fs.join(table_path, f["path"])
-        )
-    if len(groups) > 1:
-        # multi-tuple table: ONE scan (per era variant — usually
-        # exactly one) over ALL files; partition values are recovered
-        # through a broadcast metadata join on the scan-time file
-        # identity instead of a per-tuple literal-injection scan.  The
-        # old union-of-per-tuple-scans grew the plan (and driver
-        # planning time) O(partition tuples); this shape is O(1).
-        return _read_snapshot_joined_partitions(
-            spark,
-            table_path,
-            files,
-            schema,
-            part_cols,
-            type_of,
-            read_schema,
-            data_schema,
-            mapping,
-            problem_cols,
-            need_identity,
-            mat_cols,
-            dv_files,
-            row_ids,
-            mat_id,
-            mat_rcv,
-            predicate,
-        )
-    parts: list[DataFrame] = []
-    flat: list[tuple[tuple, list[str], StructType, list[str]]] = []
-    for key, paths in groups.items():
-        if problem_cols:
-            for ps, variant, cast_cols in physical_read_groups(
-                paths, read_schema, problem_cols
-            ):
-                flat.append((key, ps, variant, cast_cols))
-        else:
-            flat.append((key, paths, read_schema, []))
-    for key, paths, variant_schema, cast_cols in flat:
-        df = spark.read.schema(variant_schema).parquet(*paths)
-        for c in cast_cols:
-            df = df.withColumn(c, F.col(c).cast(problem_cols[c]))
-        if need_identity:
-            # merge-on-read: carry the file identity + physical row
-            # index so deletion vectors can filter below (must come
-            # straight off the scan — _metadata resolves only there)
-            df = df.withColumns(
-                {
-                    "__mlk_file": _fs.spark_scan_path(
-                        F.col("_metadata.file_path")
-                    ),
-                    "__mlk_ridx": F.col("_metadata.row_index"),
-                }
-            )
-        if mapping is not None:
-            keep_extra = (
-                ["__mlk_file", "__mlk_ridx"] if need_identity else []
-            ) + mat_cols
-            df = df.select(
-                *[
-                    F.col(mapping[f.name]).alias(f.name)
-                    for f in data_schema.fields
-                ],
-                *keep_extra,
-            )
-        for col_name, raw in key:
-            df = df.withColumn(
-                col_name, F.lit(raw).cast(type_of.get(col_name, StringType()))
-            )
-        keep = [f.name for f in schema.fields]
-        if need_identity:
-            keep += ["__mlk_file", "__mlk_ridx"]
-        keep += mat_cols
-        parts.append(df.select(*keep))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    if row_ids:
-        out = _attach_row_ids(spark, table_path, out, files, mat_id, mat_rcv)
-    if dv_files:
-        out = _apply_deletion_vectors(spark, table_path, out, dv_files)
-    elif row_ids:
-        out = out.drop("__mlk_file", "__mlk_ridx")
+    out = read_files(spark, table_path, files, meta, row_ids=row_ids)
     if predicate is not None:
         # pruning is advisory; the row filter guarantees exactness
         out = out.filter(predicate)
     return out
 
 
-def _read_snapshot_joined_partitions(
+def prune_by_predicate(
+    table_path: str,
+    files: list[dict[str, Any]],
+    meta: dict[str, Any] | None,
+    predicate: str,
+) -> list[dict[str, Any]]:
+    """Advisory file pruning for ``predicate``: per-file min/max/
+    nullCount stats and partition values (``skipping.prune_files``),
+    then a Bloom sidecar when one was built.  Never drops a file that
+    could hold a matching row — callers still apply ``predicate`` as a
+    row filter.  Skipped under column mapping (stats JSON is keyed by
+    physical names)."""
+    if not files or meta is None or column_mapping_of(meta) is not None:
+        return files
+    from .bloom import prune_files_bloom
+    from .skipping import prune_files
+
+    pred_schema = StructType.fromJson(json.loads(meta["schemaString"]))
+    collated = collations_of(meta)
+    # collated columns prune collation-AWARE (round 11): stats min/max
+    # are binary-ordered, so prune_files applies the case-variant
+    # interval test on the SPARK.UTF8_LCASE family (equality/IN only)
+    # and keeps every other collation's conjuncts non-prunable
+    files = prune_files(
+        files,
+        predicate,
+        pred_schema,
+        list(meta.get("partitionColumns") or []),
+        collations=collated,
+    )
+    # Blooms hash raw bytes — a case VARIANT of the literal would miss —
+    # so collated columns stay outside the bloom's view
+    bloom_schema = (
+        StructType([f for f in pred_schema.fields if f.name not in collated])
+        if collated
+        else pred_schema
+    )
+    return prune_files_bloom(table_path, files, predicate, bloom_schema)
+
+
+#: basenames whose log spelling and ``_metadata.file_name`` agree byte
+#: for byte (no percent-encoding ambiguity)
+_JOIN_SAFE_NAME = re.compile(r"[A-Za-z0-9._=-]+")
+
+
+def read_files(
     spark: SparkSession,
     table_path: str,
-    files: list[dict],
-    schema: StructType,
-    part_cols: list[str],
-    type_of: dict,
-    read_schema: StructType,
-    data_schema: StructType,
-    mapping: dict | None,
-    problem_cols: dict,
-    need_identity: bool,
-    mat_cols: list[str],
-    dv_files: list[dict],
-    row_ids: bool,
-    mat_id: str | None,
-    mat_rcv: str | None,
-    predicate,
+    files: list[dict[str, Any]],
+    meta: dict[str, Any],
+    *,
+    identity: bool = False,
+    row_ids: bool = False,
+    deletion_vectors: bool = True,
+    constants: dict[str, DataType] | None = None,
+    file_columns: list[StructField] = (),
 ) -> DataFrame:
-    """Single-scan read path for tables with >1 partition tuple: scan
-    every file in one job (one scan per widening-era variant when the
-    table carries vector-blind type changes), then attach partition
-    values by broadcast-joining a one-row-per-file metadata frame on
-    the canonical file identity — the same identity-join machinery the
-    deletion-vector and row-tracking paths use.  Plan size stays O(1)
-    in the number of partition tuples instead of O(tuples).
+    """The ONE data-file read: add actions (``path``,
+    ``partitionValues``, optional ``deletionVector`` / ``baseRowId`` /
+    ``defaultRowCommitVersion``) plus the table metadata in, one
+    DataFrame of LOGICAL rows out.  Every reader goes through here —
+    snapshots, DML probes and rewrites, OPTIMIZE/REORG, mirror staging
+    and the change feed.
 
-    Join-key choice: when every file's BASENAME is unique and contains
-    only join-safe characters (no URL-encoding ambiguity between the
-    log spelling and the scan's ``_metadata`` spelling — real tables
-    name files ``part-<uuid>.snappy.parquet``, always safe), the join
-    keys on ``_metadata.file_name`` directly: a constant-per-file
-    string with ZERO per-row canonicalization work.  Otherwise it
-    falls back to the canonical full-path spelling
-    (``spark_scan_path``/``data_path_spelling``), which pays a per-row
-    url_decode + regexp but is exact for any spelling."""
-    import re as _re
+    - one parquet scan per widening-era schema variant
+      (:func:`physical_read_groups` + casts; almost always exactly one);
+    - physical -> logical respelling under column mapping;
+    - per-file values — the partition values (cast from the log
+      strings), the file identity, row-tracking ``baseRowId`` /
+      ``defaultRowCommitVersion`` and the caller's ``constants``
+      (column -> type, the value read from each file dict under the
+      column's name): all ride ONE broadcast join of a one-row-per-
+      file frame on the scan-time file identity, so they come out
+      nullable however many files a call reads.  The plan is O(1) in
+      partition tuples and files;
+    - the deletion-vector filter (``deletion_vectors``) for readers.
 
-    basenames = [f["path"].rsplit("/", 1)[-1] for f in files]
-    fname_join = len(set(basenames)) == len(files) and all(
-        _re.fullmatch(r"[A-Za-z0-9._=-]+", b) for b in basenames
+    ``identity`` keeps ``__mlk_file`` (:func:`fs.data_path_spelling`)
+    and the physical ``__mlk_ridx``; ``row_ids`` adds ``_row_id`` /
+    ``_row_commit_version`` (materialized value when a rewrite kept
+    it, else ``baseRowId + row index`` / the add's commit version);
+    ``file_columns`` are physical columns read as stored (null where a
+    file lacks them).  A path listed twice (the change feed's insert
+    and later delete of one file) is scanned once and fans out through
+    the join, once per entry.
+
+    Join key: ``_metadata.file_name`` when every basename is unique and
+    join-safe (real tables name files ``part-<uuid>.snappy.parquet``) —
+    a constant per file, no per-row string work; otherwise the scan
+    spelling of the full path (:func:`fs.spark_scan_path` against
+    :func:`fs.scan_path_spelling`), exact for any spelling."""
+    constants = constants or {}
+    schema_json = json.loads(meta["schemaString"])
+    schema = StructType.fromJson(schema_json)
+    type_of = {f.name: f.dataType for f in schema.fields}
+    mapping = column_mapping_of(meta) or {}
+    log_of = {p: l for l, p in mapping.items()}
+    part_cols = [log_of.get(c, c) for c in meta.get("partitionColumns") or []]
+    data_fields = [f for f in schema.fields if f.name not in part_cols]
+    conf = meta.get("configuration") or {}
+    # materialized row-tracking columns are PHYSICAL only (never part of
+    # the logical schema); files written before materialization null-fill
+    mat = {}
+    if row_ids:
+        mat = {
+            "_row_id": conf.get(
+                "delta.rowTracking.materializedRowIdColumnName"
+            ),
+            "_row_commit_version": conf.get(
+                "delta.rowTracking.materializedRowCommitVersionColumnName"
+            ),
+        }
+    read_schema = StructType(
+        [
+            StructField(mapping.get(f.name, f.name), f.dataType, f.nullable)
+            for f in data_fields
+        ]
+        + [StructField(c, LongType(), True) for c in mat.values() if c]
+        + list(file_columns)
     )
-    all_paths = [_fs.join(table_path, f["path"]) for f in files]
-    if problem_cols:
-        variant_groups = physical_read_groups(
-            all_paths, read_schema, problem_cols
+    dv_files = (
+        [f for f in files if (f.get("deletionVector") or {}).get("cardinality")]
+        if deletion_vectors
+        else []
+    )
+    need_file = identity or bool(dv_files)
+    need_ridx = need_file or row_ids
+    out_fields = (
+        list(schema.fields)
+        + [StructField(c, t) for c, t in constants.items()]
+        + (
+            [StructField("__mlk_file", StringType()),
+             StructField("__mlk_ridx", LongType())]
+            if identity
+            else []
         )
-    else:
-        variant_groups = [(all_paths, read_schema, [])]
-    parts: list[DataFrame] = []
-    for paths, variant_schema, cast_cols in variant_groups:
-        df = spark.read.schema(variant_schema).parquet(*paths)
-        for c in cast_cols:
-            df = df.withColumn(c, F.col(c).cast(problem_cols[c]))
-        ident = {}
-        if part_cols:
-            ident["__mlk_pvkey"] = (
+        + [StructField(c, LongType()) for c in mat]
+        + list(file_columns)
+    )
+    if not files:
+        return spark.createDataFrame([], StructType(out_fields))
+    paths = list(dict.fromkeys(f["path"] for f in files))
+    # per-file values, one list entry per file dict: partition values
+    # (raw log strings), caller constants, the file identity and the
+    # row-tracking bases
+    pvs = [
+        {log_of.get(k, k): v for k, v in (f.get("partitionValues") or {}).items()}
+        for f in files
+    ]
+    values: dict[str, tuple[DataType, list]] = {
+        f"__mlk_pv{i}": (StringType(), [pv.get(c) for pv in pvs])
+        for i, c in enumerate(part_cols)
+    }
+    values.update({c: (t, [f.get(c) for f in files]) for c, t in constants.items()})
+    if need_file:
+        values["__mlk_file"] = (
+            StringType(),
+            [_fs.data_path_spelling(table_path, f["path"]) for f in files],
+        )
+    if row_ids:
+        values["__mlk_base"] = (LongType(), [f.get("baseRowId") for f in files])
+        values["__mlk_rcv"] = (
+            LongType(),
+            [f.get("defaultRowCommitVersion") for f in files],
+        )
+    names = [p.rsplit("/", 1)[-1] for p in paths]
+    by_name = len(set(names)) == len(names) and all(
+        _JOIN_SAFE_NAME.fullmatch(n) for n in names
+    )
+    # columns whose widening history Spark cannot promote natively
+    # (byte/short era under a decimal logical type): era-split those
+    # scans by sniffed physical type, cast right after the scan
+    problem_cols = {
+        mapping.get(c, c): type_of[c]
+        for c in legacy_promote_cols(schema_json["fields"])
+    }
+    full = [_fs.join(table_path, p) for p in paths]
+    variants = (
+        physical_read_groups(full, read_schema, problem_cols)
+        if problem_cols
+        else [(full, read_schema, [])]
+    )
+    out = None
+    for ps, variant, cast_cols in variants:
+        df = spark.read.schema(variant).parquet(*ps)
+        scan_cols = {c: F.col(c).cast(problem_cols[c]) for c in cast_cols}
+        # _metadata resolves only directly on the scan
+        if values:
+            scan_cols["__mlk_key"] = (
                 F.col("_metadata.file_name")
-                if fname_join
+                if by_name
                 else _fs.spark_scan_path(F.col("_metadata.file_path"))
             )
-        if need_identity:
-            ident["__mlk_file"] = _fs.spark_scan_path(
-                F.col("_metadata.file_path")
-            )
-            ident["__mlk_ridx"] = F.col("_metadata.row_index")
-        df = df.withColumns(ident)
-        if mapping is not None:
-            keep_extra = (
-                (["__mlk_pvkey"] if part_cols else [])
-                + (["__mlk_file", "__mlk_ridx"] if need_identity else [])
-                + mat_cols
-            )
-            df = df.select(
-                *[
-                    F.col(mapping[f.name]).alias(f.name)
-                    for f in data_schema.fields
-                ],
-                *keep_extra,
-            )
-        parts.append(df)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    if part_cols:
-        # one row per file: (join key, raw partition values); the
-        # cast from the raw log string to the column type is the same
-        # Cast the literal-injection path applied
-        pv_rows = {
-            (
-                f["path"].rsplit("/", 1)[-1]
-                if fname_join
-                else _fs.data_path_spelling(table_path, f["path"])
-            ): [(f["partitionValues"] or {}).get(c) for c in part_cols]
+        if need_ridx:
+            scan_cols["__mlk_ridx"] = F.col("_metadata.row_index")
+        df = df.withColumns(scan_cols)
+        out = df if out is None else out.unionByName(df)
+    if mapping:
+        out = out.select(
+            *[F.col(c).alias(log_of.get(c, c)) for c in out.columns]
+        )
+    if values:
+        # one frame row per file dict, so a path listed twice fans out
+        keys = [
+            f["path"].rsplit("/", 1)[-1]
+            if by_name
+            else _fs.scan_path_spelling(table_path, f["path"])
             for f in files
+        ]
+        # an Arrow table becomes a LocalRelation (a Python list would
+        # plan an RDD scan in front of the broadcast)
+        frame = spark.createDataFrame(
+            pa.table(
+                {"__mlk_key": keys, **{c: v for c, (_t, v) in values.items()}}
+            ),
+            StructType(
+                [StructField("__mlk_key", StringType())]
+                + [StructField(c, t) for c, (t, _v) in values.items()]
+            ),
+        )
+        out = out.join(F.broadcast(frame), "__mlk_key", "left")
+    # the cast from the raw log string to the column type is the Cast a
+    # typed literal of that string would apply
+    out = out.withColumns(
+        {
+            c: F.col(f"__mlk_pv{i}").cast(type_of[c])
+            for i, c in enumerate(part_cols)
         }
-        pv_schema = StructType(
-            [StructField("__mlk_pvkey", StringType(), False)]
-            + [
-                StructField(f"__mlk_pv{i}", StringType(), True)
-                for i in range(len(part_cols))
-            ]
-        )
-        pv = spark.createDataFrame(
-            [(k, *v) for k, v in pv_rows.items()], pv_schema
-        )
-        out = out.join(F.broadcast(pv), "__mlk_pvkey", "left")
+    )
+    if row_ids:
+        fresh = {
+            "_row_id": F.col("__mlk_base") + F.col("__mlk_ridx"),
+            "_row_commit_version": F.col("__mlk_rcv"),
+        }
         out = out.withColumns(
             {
-                c: F.col(f"__mlk_pv{i}").cast(
-                    type_of.get(c, StringType())
-                )
-                for i, c in enumerate(part_cols)
+                c: F.coalesce(F.col(m), fresh[c]) if m else fresh[c]
+                for c, m in mat.items()
             }
-        )
-    keep = [f.name for f in schema.fields]
-    if need_identity:
-        keep += ["__mlk_file", "__mlk_ridx"]
-    keep += mat_cols
-    out = out.select(*keep)
-    if row_ids:
-        out = _attach_row_ids(
-            spark, table_path, out, files, mat_id, mat_rcv
         )
     if dv_files:
         out = _apply_deletion_vectors(spark, table_path, out, dv_files)
-    elif row_ids:
-        out = out.drop("__mlk_file", "__mlk_ridx")
-    if predicate is not None:
-        out = out.filter(predicate)
-    return out
-
-
-def _attach_row_ids(
-    spark: SparkSession,
-    table_path: str,
-    out: DataFrame,
-    files: list[dict],
-    mat_id: str | None,
-    mat_rcv: str | None,
-) -> DataFrame:
-    """Materialize ``_row_id`` / ``_row_commit_version`` (PROTOCOL.md
-    "Row Tracking" read semantics): per row, the materialized column
-    value when a rewrite preserved it, else the FRESH id
-    ``add.baseRowId + physical row index`` (and the add's
-    defaultRowCommitVersion).  The per-file id frame is metadata-sized
-    and broadcast; rows never shuffle."""
-    id_rows = [
-        (
-            _fs.data_path_spelling(table_path, f["path"]),
-            f.get("baseRowId"),
-            f.get("defaultRowCommitVersion"),
-        )
-        for f in files
-    ]
-    ids = F.broadcast(
-        spark.createDataFrame(
-            id_rows, "__mlk_file string, __mlk_base long, __mlk_rcv long"
-        )
-    )
-    out = out.join(ids, "__mlk_file", "left")
-    fresh_id = F.col("__mlk_base") + F.col("__mlk_ridx")
-    fresh_rcv = F.col("__mlk_rcv")
-    out = out.withColumns(
-        {
-            "_row_id": F.coalesce(F.col(mat_id), fresh_id)
-            if mat_id
-            else fresh_id,
-            "_row_commit_version": F.coalesce(F.col(mat_rcv), fresh_rcv)
-            if mat_rcv
-            else fresh_rcv,
-        }
-    ).drop("__mlk_base", "__mlk_rcv", *[c for c in (mat_id, mat_rcv) if c])
-    return out
+    return out.select(*[f.name for f in out_fields])
 
 
 #: fromTypes whose parquet annotation (INT(8)/INT(16)) Spark's
@@ -1912,8 +1817,6 @@ def _apply_deletion_vectors(
     table_path: str,
     out: DataFrame,
     dv_files: list[dict],
-    file_col: str = "__mlk_file",
-    ridx_col: str = "__mlk_ridx",
 ) -> DataFrame:
     """Filter ``out`` (which carries ``__mlk_file``/``__mlk_ridx``) by
     each file's deletion vector — Delta merge-on-read (PROTOCOL.md
@@ -1936,30 +1839,22 @@ def _apply_deletion_vectors(
         for f in dv_files
     ]
     dv_df = spark.createDataFrame(
-        payloads, f"{file_col} string, __mlk_payload binary"
+        payloads, "__mlk_file string, __mlk_payload binary"
     )
 
     def explode(batches):
         import pandas as pd
 
         for pdf in batches:
-            for fpath, payload in zip(
-                pdf[file_col], pdf["__mlk_payload"]
-            ):
+            for fpath, payload in zip(pdf["__mlk_file"], pdf["__mlk_payload"]):
                 idx = _dv.deserialize(bytes(payload))
-                yield pd.DataFrame(
-                    {file_col: fpath, ridx_col: idx}
-                )
+                yield pd.DataFrame({"__mlk_file": fpath, "__mlk_ridx": idx})
 
-    deleted = dv_df.mapInPandas(
-        explode, f"{file_col} string, {ridx_col} long"
-    )
+    deleted = dv_df.mapInPandas(explode, "__mlk_file string, __mlk_ridx long")
     total = sum(int(f["deletionVector"]["cardinality"]) for f in dv_files)
     if total <= 10_000_000:
         deleted = F.broadcast(deleted)
-    return out.join(
-        deleted, [file_col, ridx_col], "left_anti"
-    ).drop(file_col, ridx_col)
+    return out.join(deleted, ["__mlk_file", "__mlk_ridx"], "left_anti")
 
 
 def prior_dv_descs(
@@ -2290,46 +2185,15 @@ def read_changes(
     if meta is None:
         raise ValueError(f"no table metadata at {table_path}")
     schema = StructType.fromJson(json.loads(meta["schemaString"]))
-    part_cols = list(meta.get("partitionColumns") or [])
-    type_of = {f.name: f.dataType for f in schema.fields}
-    data_schema = StructType([f for f in schema.fields if f.name not in part_cols])
-    # column mapping (round 12): data AND change files carry PHYSICAL
-    # column names; reads respell physically and alias back to logical
-    mapping = column_mapping_of(meta) or {}
-    log_of = {p: l for l, p in mapping.items()}
-
-    def _phys_st(st: StructType) -> StructType:
-        if not mapping:
-            return st
-        return StructType(
-            [
-                StructField(
-                    mapping.get(f.name, f.name),
-                    f.dataType,
-                    f.nullable,
-                    f.metadata,
-                )
-                for f in st.fields
-            ]
-        )
-
-    def _to_logical(df):
-        if not mapping:
-            return df
-        return df.select(
-            *[F.col(c).alias(log_of.get(c, c)) for c in df.columns]
-        )
-
-    # (version, change_type, partition tuple) -> file paths; the
-    # change_type "__cdc__" marks row-level change files whose
-    # _change_type column lives IN the file
-    groups: dict[tuple, list[str]] = {}
-    #: DV rewrites: (version, pv) -> [(rel, new_payload, old_payload,
-    #: cardinality)] — change rows are the bitmap DELTA (inner join)
-    delta_groups: dict[tuple, list[tuple]] = {}
-    #: one-sided DV masks: (version, change, pv) -> [(rel, payload,
-    #: cardinality)] — survivors only (anti join)
-    apply_groups: dict[tuple, list[tuple]] = {}
+    # every entry is one (file, commit) read; read_files respells
+    # column-mapped files and casts the partition values.  Whole-file
+    # reads: data files (insert/delete constant) and row-level change
+    # files, whose _change_type lives IN the file
+    whole: list[dict] = []
+    #: DV rewrites — change rows are the bitmap DELTA (inner join)
+    deltas: list[dict] = []
+    #: one-sided DV masks — survivors only (anti join)
+    masked: list[dict] = []
     from . import dv as _dv  # used by the pair-frame explode below
 
     _dv_blob_cache: dict = {}  # span-wide: consecutive delete_dv
@@ -2338,6 +2202,14 @@ def read_changes(
     dv_possible = "deletionVectors" in (
         (proto or {}).get("readerFeatures") or []
     )
+
+    def _require_live(rel: str, v: int, what: str) -> None:
+        if not _fs.get_fs(table_path).exists(_fs.join(table_path, rel)):
+            raise ValueError(
+                f"{what} {rel} (commit {v}) was vacuumed; the change "
+                "feed for this span is gone"
+            )
+
     for v in span:
         acts = _read_commit(table_path, v)
         cdc_acts = [a["cdc"] for a in acts if a.get("cdc") is not None]
@@ -2347,113 +2219,77 @@ def read_changes(
             # commit (CoW rewrite survivors, DV re-adds) is layout,
             # not change
             for a in cdc_acts:
-                full = _fs.join(table_path, a["path"])
-                if not _fs.get_fs(table_path).exists(full):
-                    raise ValueError(
-                        f"change file {a['path']} (commit {v}) was "
-                        "vacuumed; the change feed for this span is gone"
-                    )
-                pv = tuple(sorted((a.get("partitionValues") or {}).items()))
-                groups.setdefault((v, "__cdc__", pv), []).append(full)
+                _require_live(a["path"], v, "change file")
+                whole.append(
+                    {
+                        "path": a["path"],
+                        "partitionValues": a.get("partitionValues"),
+                        "_commit_version": v,
+                        "__mlk_ct": None,
+                    }
+                )
             continue
         for e in classify_mor_commit(
             table_path, acts, v, dv_possible, _dv_blob_cache
         ):
-            pv = tuple(sorted(e["pv"].items()))
+            entry = {
+                "path": e["path"],
+                "partitionValues": e["pv"],
+                "_commit_version": v,
+            }
             kind = e["kind"]
             if kind in ("insert", "delete"):
-                full = _fs.join(table_path, e["path"])
-                if kind == "delete" and not _fs.get_fs(table_path).exists(
-                    full
-                ):
-                    raise ValueError(
-                        f"removed file {e['path']} (commit {v}) was "
-                        "vacuumed; the change feed for this span is gone"
-                    )
-                groups.setdefault((v, kind, pv), []).append(full)
+                if kind == "delete":
+                    _require_live(e["path"], v, "removed file")
+                whole.append({**entry, "__mlk_ct": kind})
             elif kind == "delta":
-                delta_groups.setdefault((v, pv), []).append(
-                    (
-                        e["path"],
-                        e["new_payload"],
-                        e["old_payload"],
-                        e["cardinality"],
-                    )
+                deltas.append(
+                    {
+                        **entry,
+                        "new": e["new_payload"],
+                        "old": e["old_payload"],
+                        "card": e["cardinality"],
+                    }
                 )
             else:  # insert_apply / delete_apply: survivors only
                 change = "insert" if kind == "insert_apply" else "delete"
-                if change == "delete" and not _fs.get_fs(table_path).exists(
-                    _fs.join(table_path, e["path"])
-                ):
-                    raise ValueError(
-                        f"removed file {e['path']} (commit {v}) was "
-                        "vacuumed; the change feed for this span is gone"
-                    )
-                apply_groups.setdefault((v, change, pv), []).append(
-                    (e["path"], e["payload"], e["cardinality"])
+                if change == "delete":
+                    _require_live(e["path"], v, "removed file")
+                masked.append(
+                    {
+                        **entry,
+                        "_change_type": change,
+                        "new": e["payload"],
+                        "old": None,
+                        "card": e["cardinality"],
+                    }
                 )
 
-    parts: list[DataFrame] = []
-    for (v, change, pv), paths in groups.items():
-        if change == "__cdc__":
-            cdc_schema = StructType(
-                _phys_st(data_schema).fields
-                + [StructField("_change_type", StringType())]
-            )
-            df = _to_logical(spark.read.schema(cdc_schema).parquet(*paths))
-        else:
-            df = _to_logical(
-                spark.read.schema(_phys_st(data_schema)).parquet(*paths)
-            )
-        for col_name, raw in pv:
-            # partitionValues keys are physical under column mapping
-            col_name = log_of.get(col_name, col_name)
-            df = df.withColumn(
-                col_name, F.lit(raw).cast(type_of.get(col_name, StringType()))
-            )
-        if change != "__cdc__":
-            df = df.withColumn("_change_type", F.lit(change))
-        parts.append(
-            df.select(*([f.name for f in schema.fields] + ["_change_type"]))
-            .withColumn("_commit_version", F.lit(v).cast("long"))
-        )
-
-    def _identity_scan(rels):
-        return _to_logical(
-            spark.read.schema(_phys_st(data_schema))
-            .parquet(*[_fs.join(table_path, r) for r in rels])
-            .withColumns(
-                {
-                    "__mlk_file": _fs.spark_scan_path(
-                        F.col("_metadata.file_path")
-                    ),
-                    "__mlk_ridx": F.col("_metadata.row_index"),
-                }
-            )
-        )
-
     def _pair_frame(entries, delta: bool):
-        """(file, row_index[, _change_type]) pairs exploded from the
-        compressed bitmaps executor-side — the driver ships only the
-        KB-scale payloads (same shape as _apply_deletion_vectors)."""
+        """(file, row_index, commit, _change_type) pairs exploded from
+        the compressed bitmaps executor-side — the driver ships only
+        the KB-scale payloads (same shape as _apply_deletion_vectors)."""
         rows = [
             (
-                _fs.data_path_spelling(table_path, e[0]),
-                bytearray(e[1]),
-                bytearray(e[2]) if delta and e[2] is not None else None,
+                _fs.data_path_spelling(table_path, e["path"]),
+                e["_commit_version"],
+                bytearray(e["new"]),
+                bytearray(e["old"]) if e["old"] is not None else None,
             )
             for e in entries
         ]
         pair_src = spark.createDataFrame(
-            rows, "__mlk_file string, __n binary, __o binary"
+            rows,
+            "__mlk_file string, _commit_version long, __n binary, __o binary",
         )
 
         def explode(batches):
             import pandas as pd
 
             for pdf in batches:
-                for fp, nb, ob in zip(
-                    pdf["__mlk_file"], pdf["__n"], pdf["__o"]
+                for fp, cv, nb, ob in zip(
+                    pdf["__mlk_file"], pdf["_commit_version"], pdf["__n"],
+                    pdf["__o"],
                 ):
                     new = set(_dv.deserialize(bytes(nb)))
                     old = (
@@ -2468,6 +2304,7 @@ def read_changes(
                             {
                                 "__mlk_file": fp,
                                 "__mlk_ridx": dels + ins,
+                                "_commit_version": cv,
                                 "_change_type": ["delete"] * len(dels)
                                 + ["insert"] * len(ins),
                             }
@@ -2477,52 +2314,56 @@ def read_changes(
                             {
                                 "__mlk_file": fp,
                                 "__mlk_ridx": sorted(new),
+                                "_commit_version": cv,
                                 "_change_type": "delete",
                             }
                         )
 
         pairs = pair_src.mapInPandas(
-            explode, "__mlk_file string, __mlk_ridx long, _change_type string"
+            explode,
+            "__mlk_file string, __mlk_ridx long, _commit_version long, "
+            "_change_type string",
         )
-        total = sum(e[-1] for e in entries)
+        total = sum(e["card"] for e in entries)
         return F.broadcast(pairs) if total <= 10_000_000 else pairs
 
-    def _finish(df, pv, v):
-        for col_name, raw in pv:
-            col_name = log_of.get(col_name, col_name)
-            df = df.withColumn(
-                col_name,
-                F.lit(raw).cast(type_of.get(col_name, StringType())),
-            )
+    pair_key = ["__mlk_file", "__mlk_ridx", "_commit_version"]
+    commit = {"_commit_version": LongType()}
+    parts: list[DataFrame] = []
+    if whole:
         parts.append(
-            df.select(*([f.name for f in schema.fields] + ["_change_type"]))
-            .withColumn("_commit_version", F.lit(v).cast("long"))
+            read_files(
+                spark,
+                table_path,
+                whole,
+                meta,
+                constants={**commit, "__mlk_ct": StringType()},
+                file_columns=[StructField("_change_type", StringType())],
+            ).withColumn(
+                "_change_type",
+                F.coalesce(F.col("__mlk_ct"), F.col("_change_type")),
+            )
         )
-
-    for (v, pv), entries in delta_groups.items():
+    if deltas:
         # the bitmap delta: inner join keeps exactly the changed rows,
         # _change_type rides the pair (delete for new∖old, insert for
         # the old∖new of a shrinking vector)
-        df = (
-            _identity_scan([e[0] for e in entries])
-            .join(_pair_frame(entries, delta=True), ["__mlk_file", "__mlk_ridx"])
-            .drop("__mlk_file", "__mlk_ridx")
+        parts.append(
+            read_files(
+                spark, table_path, deltas, meta, identity=True,
+                constants=commit,
+            ).join(_pair_frame(deltas, delta=True), pair_key)
         )
-        _finish(df, pv, v)
-    for (v, change, pv), entries in apply_groups.items():
+    if masked:
         # one-sided mask: survivors only (fresh DV-born file's inserts,
         # or the live rows of a fully-removed DV'd file as deletes)
-        df = (
-            _identity_scan([e[0] for e in entries])
-            .join(
-                _pair_frame(entries, delta=False),
-                ["__mlk_file", "__mlk_ridx"],
-                "left_anti",
-            )
-            .drop("__mlk_file", "__mlk_ridx")
-            .withColumn("_change_type", F.lit(change))
+        parts.append(
+            read_files(
+                spark, table_path, masked, meta, identity=True,
+                constants={**commit, "_change_type": StringType()},
+            ).join(_pair_frame(masked, delta=False), pair_key, "left_anti")
         )
-        _finish(df, pv, v)
+    cols = [f.name for f in schema.fields] + ["_change_type", "_commit_version"]
     if not parts:
         empty = StructType(
             schema.fields
@@ -2532,9 +2373,9 @@ def read_changes(
             ]
         )
         return spark.createDataFrame([], empty)
-    out = parts[0]
+    out = parts[0].select(*cols)
     for p in parts[1:]:
-        out = out.unionByName(p)
+        out = out.unionByName(p.select(*cols))
     return out
 
 
@@ -2579,9 +2420,37 @@ def _prune_partitions(
     ]
 
 
-def partition_subdir(part_values: dict[str, str]) -> str:
-    """Hive-style ``k=v/..`` relative dir for a partition tuple."""
-    return "/".join(f"{k}={v}" for k, v in sorted(part_values.items()))
+#: Spark's hive directory spelling (ExternalCatalogUtils): these
+#: characters are percent-escaped, null is the default-partition name
+_HIVE_ESCAPED = frozenset(
+    ['"', "#", "%", "'", "*", "/", ":", "=", "?", "\\", "\x7f", "{", "[", "]", "^"]
+    + [chr(c) for c in range(1, 32)]
+)
+_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+
+
+def partition_subdir(part_values: dict[str, str | None]) -> str:
+    """Hive-style ``k=v/..`` relative dir for a partition tuple, spelled
+    as Spark's partitioned writer spells it."""
+    def esc(v: str | None) -> str:
+        if v is None or v == "":
+            return _HIVE_NULL
+        return "".join(f"%{ord(c):02X}" if c in _HIVE_ESCAPED else c for c in v)
+
+    return "/".join(f"{k}={esc(v)}" for k, v in sorted(part_values.items()))
+
+
+def hive_partition_values(rel_dir: str) -> dict[str, str | None]:
+    """The partition tuple a Spark-written ``k=v/..`` directory holds —
+    escapes undone and the default partition read back as null, so
+    ``add.partitionValues`` records the REAL values."""
+    import urllib.parse
+
+    out: dict[str, str | None] = {}
+    for seg in rel_dir.split("/"):
+        k, _, v = seg.partition("=")
+        out[k] = None if v == _HIVE_NULL else urllib.parse.unquote(v)
+    return out
 
 
 def typed_partition_cols(spark: SparkSession, table_path: str) -> dict[str, Any]:

@@ -40,6 +40,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from . import fs as _fs
+from .delta_log import hive_partition_values
 from .skipping import file_stats_json
 
 TX_FMT = "{:020d}"
@@ -362,6 +363,16 @@ def _stamp_mapping_identity(
             md["delta.columnMapping.id"] = max_id
         out.append({**f, "metadata": md})
     return out, max_id
+
+
+def _by_partition(files: list[dict]) -> list[list[dict]]:
+    """``files`` grouped by partition tuple — each group rewrites into
+    its own partition directory."""
+    groups: dict[tuple, list[dict]] = {}
+    for f in files:
+        key = tuple(sorted((f["partitionValues"] or {}).items()))
+        groups.setdefault(key, []).append(f)
+    return list(groups.values())
 
 
 class DeltaSink:
@@ -1083,54 +1094,6 @@ class DeltaSink:
             ),
         )
         return self._rt_mats_cache
-
-    def _materialize_row_ids(
-        self, df, paths: list[str], mat_id: str, mat_rcv: str | None
-    ):
-        """Fill the materialized row-id / commit-version columns for
-        rows that still carry fresh (positional) ids: value =
-        ``add.baseRowId + physical row index``, resolved by a
-        BROADCAST join against the group's per-file id frame (metadata-
-        sized; a literal map would bloat the plan on 10k-file groups).
-        Rows whose materialized value is already set keep it."""
-        from .delta_log import snapshot_files
-
-        info = {
-            f["path"]: (
-                f.get("baseRowId"),
-                f.get("defaultRowCommitVersion"),
-            )
-            for f in snapshot_files(self.spark, self.path)
-        }
-        id_rows = [
-            (
-                _fs.data_path_spelling(self.path, rel),
-                *(info.get(rel) or (None, None)),
-            )
-            for rel in paths
-        ]
-        ids = F.broadcast(
-            self.spark.createDataFrame(
-                id_rows,
-                "__mlk_rtfile string, __mlk_base long, __mlk_frcv long",
-            )
-        )
-        df = df.join(ids, "__mlk_rtfile", "left")
-        for col, fresh in (
-            (mat_id, F.col("__mlk_base") + F.col("__mlk_rtridx")),
-            (mat_rcv, F.col("__mlk_frcv")),
-        ):
-            if not col:
-                continue
-            have = (
-                F.col(col)
-                if col in df.columns
-                else F.lit(None).cast("long")
-            )
-            df = df.withColumn(col, F.coalesce(have, fresh))
-        # keep the identity helpers: the caller's transform may use
-        # them (reorg's DV anti-join); _rewrite_group drops them last
-        return df.drop("__mlk_base", "__mlk_frcv")
 
     def _check_conflicts(self, versions, actions: list[dict]) -> None:
         """Delta's logical conflict rules (delta-io PROTOCOL.md +
@@ -2018,24 +1981,22 @@ class DeltaSink:
         counts: dict[str, int] | None = None
         for dirpath, _dirs, files in self.fs.walk(tmp):
             rel_dir = dirpath[len(tmp):].strip("/") or "."
-            part_values = {}
-            if rel_dir != ".":
-                for seg in rel_dir.split("/"):
-                    k, _, val = seg.partition("=")
-                    part_values[k] = val
+            part_values = (
+                hive_partition_values(rel_dir) if rel_dir != "." else {}
+            )
             for name in files:
                 if not name.endswith(".parquet"):
                     continue
                 src = _fs.join(dirpath, name)
-                meta = _safe_parquet_meta(src)
-                if meta is None:
+                footer = _safe_parquet_meta(src)
+                if footer is None:
                     if counts is None:
                         counts = _spark_row_counts(self.spark, tmp)
                     nrows = counts.get(self.fs.normalize(src), 0)
                     stats = json.dumps({"numRecords": nrows})
                 else:
-                    nrows = meta.num_rows
-                    stats = file_stats_json(meta)
+                    nrows = footer.num_rows
+                    stats = file_stats_json(footer)
                 if skip_empty and nrows == 0:
                     continue
                 new_name = f"part-{uuid.uuid4().hex}.snappy.parquet"
@@ -2548,69 +2509,58 @@ class DeltaSink:
             == "true"
         )
 
-    def _phys_read_schema(self, logical_schema):
-        """``logical_schema`` respelled with the table's PHYSICAL
-        column names (identity when the table is unmapped) — what the
-        parquet files actually carry under column mapping."""
-        mapping = self._current_mapping()
-        if not mapping or logical_schema is None:
-            return logical_schema
-        from pyspark.sql.types import StructField, StructType
+    def _scan(self, files, meta, row_ids=False, **kw) -> DataFrame:
+        """The table's ``files`` as logical rows through
+        :func:`delta_log.read_files` (``kw`` passes through).
+        ``row_ids`` fills the row-tracking MATERIALIZED columns (the
+        configured physical names) with every row's id / commit version
+        — what a rewrite must carry so row identities survive it
+        (PROTOCOL.md "Row Tracking"); a no-op unless the table tracks
+        rows with materialized columns."""
+        from .delta_log import read_files
 
-        return StructType(
-            [
-                StructField(
-                    mapping.get(f.name, f.name),
-                    f.dataType,
-                    f.nullable,
-                    f.metadata,
-                )
-                for f in logical_schema.fields
-            ]
+        mat_id, mat_rcv = (
+            self._rt_mat_cols()
+            if row_ids and self._rt_enabled()
+            else (None, None)
         )
+        df = read_files(
+            self.spark, self.path, files, meta, row_ids=bool(mat_id), **kw
+        )
+        if not mat_id:
+            return df
+        df = df.withColumnRenamed("_row_id", mat_id)
+        if mat_rcv:
+            return df.withColumnRenamed("_row_commit_version", mat_rcv)
+        return df.drop("_row_commit_version")
 
-    def _scan_logical(self, paths, logical_schema, with_pos=False):
-        """Scan table data files yielding LOGICAL column names — the
-        ONE home of the physical→logical respelling that makes the
-        copy-on-write rewrite paths work on column-mapped tables
-        (round 12; they previously refused outright).  ``with_pos``
-        attaches the physical position columns (``_f``/``_ridx``)
-        BEFORE the alias: ``_metadata`` resolves only directly on the
-        scan."""
-        import pyspark.sql.functions as F
+    def _dv_probe(self, files, meta, row_ids=False) -> DataFrame:
+        """Merge-on-read DML probe: every PHYSICAL row of ``files`` with
+        its position (``_f``, ``_ridx``).  Existing deletion vectors are
+        NOT applied here — the caller anti-joins ``_old_dv_pairs``,
+        which past ``_DV_DISTRIBUTED_FILES`` fetches payloads on the
+        executors instead of the driver."""
+        return self._scan(
+            files, meta, row_ids=row_ids, identity=True,
+            deletion_vectors=False,
+        ).withColumnsRenamed({"__mlk_file": "_f", "__mlk_ridx": "_ridx"})
 
-        reader = self.spark.read
-        phys = self._phys_read_schema(logical_schema)
-        if phys is not None:
-            reader = reader.schema(phys)
-        df = reader.parquet(*[_fs.join(self.path, p) for p in paths])
-        if with_pos:
-            df = df.withColumns(
-                {
-                    "_f": _fs.spark_scan_path(F.input_file_name()),
-                    "_ridx": F.col("_metadata.row_index"),
-                }
-            )
-        mapping = self._current_mapping()
-        if mapping:
-            inv = {p: l for l, p in mapping.items()}
-            df = df.select(
-                *[F.col(c).alias(inv.get(c, c)) for c in df.columns]
-            )
-        return df
-
-    def _hit_frame(self, hit_parts, data_schema, inject) -> DataFrame:
-        """Union of ONLY the hit files (per partition group, partition
-        values injected) — the frame the CDF staging scans, so change
-        extraction costs O(files touched), never a second whole-table
-        probe."""
-        frames = []
-        for paths, pv in hit_parts:
-            frames.append(inject(self._scan_logical(paths, data_schema), pv))
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
-        return out
+    def _hit_files(self, files, meta, match) -> list[dict]:
+        """The ``files`` holding a row that ``match(probe)`` keeps: ONE
+        probe scan over all of them (data predicates push down to
+        parquet), only the matching files' identities collected."""
+        if not files:
+            return []
+        probe = self._scan(files, meta, identity=True)
+        hit = {
+            r[0]
+            for r in match(probe).select("__mlk_file").distinct().collect()
+        }
+        return [
+            f
+            for f in files
+            if _fs.data_path_spelling(self.path, f["path"]) in hit
+        ]
 
     def _concurrent_stage(self, thunks):
         """Run independent staging jobs — each its own Spark action plus
@@ -2634,8 +2584,6 @@ class DeltaSink:
             ThreadPoolExecutor,
             wait,
         )
-
-        import threading
 
         # memoize the mapping once before the race (double-compute is
         # benign but wasteful)
@@ -2721,22 +2669,20 @@ class DeltaSink:
         counts: dict[str, int] | None = None
         for dirpath, _dirs, files in self.fs.walk(tmp):
             rel_dir = dirpath[len(tmp):].strip("/") or "."
-            part_values = {}
-            if rel_dir != ".":
-                for seg in rel_dir.split("/"):
-                    k, _, val = seg.partition("=")
-                    part_values[k] = val
+            part_values = (
+                hive_partition_values(rel_dir) if rel_dir != "." else {}
+            )
             for name in files:
                 if not name.endswith(".parquet"):
                     continue
                 src = _fs.join(dirpath, name)
-                meta = _safe_parquet_meta(src)
-                if meta is None:
+                footer = _safe_parquet_meta(src)
+                if footer is None:
                     if counts is None:
                         counts = _spark_row_counts(self.spark, tmp)
                     if counts.get(self.fs.normalize(src), 0) == 0:
                         continue
-                elif meta.num_rows == 0:
+                elif footer.num_rows == 0:
                     continue
                 new_name = f"cdc-{uuid.uuid4().hex}.snappy.parquet"
                 rel = (
@@ -2762,18 +2708,18 @@ class DeltaSink:
 
     def _rewrite_group(
         self,
-        paths: list[str],
-        part_values: dict[str, str],
+        files: list[dict],
+        meta: dict,
         transform,
         data_change: bool,
         now: int,
-        read_schema=None,
         tags: dict[str, str] | None = None,
     ) -> list[dict]:
-        """Rewrite one partition group's files through ``transform``:
+        """Rewrite one partition group's ``files`` through ``transform``:
         emit removes for the old files and adds for the rewritten ones.
-        Partition columns stay OUT of the data files (injected at read,
-        A7/O6), so the rewrite only moves the non-partition columns.
+        ``transform`` sees the group's LOGICAL rows (partition columns
+        included, deletion vectors applied); partition columns stay OUT
+        of the written files (injected at read, A7/O6).
 
         Under row tracking, the rows' ids are MATERIALIZED into the
         rewritten files (the configured physical columns) before the
@@ -2783,48 +2729,12 @@ class DeltaSink:
         read."""
         from .delta_log import partition_subdir
 
-        rt = self._rt_enabled()
-        mats = self._rt_mat_cols() if rt else (None, None)
+        part_values = files[0]["partitionValues"] or {}
+        paths = [f["path"] for f in files]
         mapping = self._current_mapping()
-        reader = self.spark.read
-        if read_schema is not None:
-            # physical spelling under column mapping (the files carry
-            # physical names); the row-tracking materialization columns
-            # are ALREADY physical by definition
-            schema = self._phys_read_schema(read_schema)
-            if rt and mats[0]:
-                from pyspark.sql.types import LongType, StructField, StructType
-
-                schema = StructType(
-                    [
-                        *schema.fields,
-                        *[
-                            StructField(c, LongType(), True)
-                            for c in mats
-                            if c and c not in schema.fieldNames()
-                        ],
-                    ]
-                )
-            reader = reader.schema(schema)
-        df = reader.parquet(*[_fs.join(self.path, p) for p in paths])
-        if rt and mats[0]:
-            # attach the physical identity BEFORE any join: _metadata
-            # resolves only directly on the scan.  Transforms may use
-            # the helpers (__mlk_rtfile/__mlk_rtridx); they are dropped
-            # before the write either way.
-            df = df.withColumn(
-                "__mlk_rtfile",
-                _fs.spark_scan_path(F.col("_metadata.file_path")),
-            ).withColumn("__mlk_rtridx", F.col("_metadata.row_index"))
-            df = self._materialize_row_ids(df, paths, *mats)
-        if mapping:
-            # transforms (predicates, assignments, joins) speak LOGICAL
-            # names; alias after the _metadata attach above
-            inv = {p: l for l, p in mapping.items()}
-            df = df.select(
-                *[F.col(c).alias(inv.get(c, c)) for c in df.columns]
-            )
-        out = transform(df).drop("__mlk_rtfile", "__mlk_rtridx")
+        out = transform(self._scan(files, meta, row_ids=True)).drop(
+            *(meta.get("partitionColumns") or [])
+        )
         if mapping:
             # the rewritten files must carry PHYSICAL names again so
             # stats/readers line up (same rule as _stage_adds)
@@ -2850,13 +2760,13 @@ class DeltaSink:
             if not name.endswith(".parquet"):
                 continue
             src = _fs.join(tmp, name)
-            meta = _safe_parquet_meta(src)
-            if meta is None:
+            footer = _safe_parquet_meta(src)
+            if footer is None:
                 if counts is None:
                     counts = _spark_row_counts(self.spark, tmp)
                 if counts.get(self.fs.normalize(src), 0) == 0:
                     continue
-            elif meta.num_rows == 0:
+            elif footer.num_rows == 0:
                 continue
             new_name = f"part-{uuid.uuid4().hex}.snappy.parquet"
             rel = f"{subdir}/{new_name}" if subdir else new_name
@@ -2869,8 +2779,8 @@ class DeltaSink:
                 "size": self.fs.getsize(dst),
                 "modificationTime": now,
                 "dataChange": data_change,
-                "stats": file_stats_json(meta)
-                if meta is not None
+                "stats": file_stats_json(footer)
+                if footer is not None
                 else json.dumps(
                     {
                         "numRecords": counts.get(
@@ -2885,31 +2795,15 @@ class DeltaSink:
         self.fs.rmtree(tmp)
         return actions
 
-    def _partition_groups(self) -> dict[tuple, list[str]]:
-        from .delta_log import snapshot_files
-
-        groups: dict[tuple, list[str]] = {}
-        for f in snapshot_files(self.spark, self.path):
-            key = tuple(sorted((f["partitionValues"] or {}).items()))
-            groups.setdefault(key, []).append(f["path"])
-        return groups
-
-    def _dv_map(self) -> dict[str, dict]:
-        """Live files carrying a deletion vector: path -> descriptor."""
-        from .delta_log import snapshot_files
-
-        return {
-            f["path"]: dict(f["deletionVector"])
-            for f in snapshot_files(self.spark, self.path)
+    def _require_no_dvs(self, op: str, files: list[dict]) -> None:
+        """Copy-on-write rewrites of a table with deletion vectors
+        refuse until ``reorg()`` materializes them (Delta's own REORG
+        TABLE ... APPLY (PURGE) prerequisite)."""
+        dvs = [
+            f
+            for f in files
             if (f.get("deletionVector") or {}).get("cardinality")
-        }
-
-    def _require_no_dvs(self, op: str) -> None:
-        """Copy-on-write rewrites read data files RAW — on a file with
-        a deletion vector that would resurrect its deleted rows.  The
-        CoW paths therefore refuse until ``reorg()`` materializes the
-        DVs (Delta's own REORG TABLE ... APPLY (PURGE) prerequisite)."""
-        dvs = self._dv_map()
+        ]
         if dvs:
             raise ValueError(
                 f"{op} on a table with deletion vectors "
@@ -2918,14 +2812,15 @@ class DeltaSink:
             )
 
     def _data_schema(self):
-        """(partition-col types, data-col StructType) from the table
-        metadata — both driver-side reads.  The StructType is LOGICAL;
-        on a column-mapped table the rewrite paths respell reads/
-        writes physically through _scan_logical/_phys_read_schema
-        (round 12 — mapped tables previously refused outright).
-        Mapped AND partitioned stays loud: partitionValues keys,
-        directory names, and the inject() casts are keyed physically
-        and the rewrite paths don't translate them yet."""
+        """(metadata, partition-col types, data-col StructType) from ONE
+        driver-side metadata read — ``(None, {}, None)`` for a table
+        with no commits yet.  The StructType is LOGICAL; every data read
+        goes through :func:`delta_log.read_files`, which respells a
+        column-mapped table's files.  Mapped AND partitioned stays loud
+        for the WRITE side: ``_stage_adds``, ``_stage_cdc`` and
+        ``_rewrite_group`` name partition directories and
+        ``add.partitionValues`` after the frame's logical columns,
+        while a column-mapped table keys them by physical name."""
         from .delta_log import (
             UnsupportedTableFeature,
             column_mapping_of,
@@ -2936,7 +2831,7 @@ class DeltaSink:
 
         meta = _lm(self.spark, self.path)
         if meta is None:
-            return {}, None
+            return None, {}, None
         if column_mapping_of(meta) is not None and (
             meta.get("partitionColumns") or []
         ):
@@ -2949,88 +2844,56 @@ class DeltaSink:
         schema = _St.fromJson(json.loads(meta["schemaString"]))
         part_cols = set(meta.get("partitionColumns") or [])
         types = {f.name: f.dataType for f in schema.fields if f.name in part_cols}
-        return types, _St([f for f in schema.fields if f.name not in part_cols])
+        return (
+            meta,
+            types,
+            _St([f for f in schema.fields if f.name not in part_cols]),
+        )
 
     def delete(self, predicate: str) -> int:
         """Row-level delete: rewrite only the FILES that contain matching
         rows — K6's `.delete table records` as copy-on-write.
 
-        One probe scan over the whole snapshot (partition values injected
-        per group, data predicates pushed down to parquet) finds the
-        affected files; each is then rewritten without its matching rows.
-        All rewrites land in ONE atomic commit.  At scale this is two
-        jobs total — probe + rewrite — not one probe per partition."""
+        One probe scan over the snapshot (files first pruned by their
+        stats/partition values, data predicates pushed down to parquet)
+        finds the affected files; each partition group of them is then
+        rewritten without its matching rows.  All rewrites land in ONE
+        atomic commit.  At scale this is two jobs total — probe +
+        rewrite — not one probe per partition."""
         import pyspark.sql.functions as F
 
-        self._require_no_dvs("DELETE")
+        from .delta_log import prune_by_predicate, snapshot_files
+
         now = int(time.time() * 1000)
         cdf = self._cdf_enabled()
-        types, data_schema = self._data_schema()
-        groups = self._partition_groups()
-
-        def inject(df, pv):
-            for c, raw in pv.items():
-                df = df.withColumn(c, F.lit(raw).cast(types.get(c, "string")))
-            return df
-
-        probes = []
-        for key, paths in groups.items():
-            probes.append(
-                inject(
-                    self._scan_logical(paths, data_schema), dict(key)
-                ).withColumn("_f", F.input_file_name())
+        meta, _types, _data_schema = self._data_schema()
+        files = snapshot_files(self.spark, self.path)
+        self._require_no_dvs("DELETE", files)
+        files = prune_by_predicate(self.path, files, meta, predicate)
+        hit = self._hit_files(files, meta, lambda df: df.filter(predicate))
+        thunks = [
+            lambda g=g: self._rewrite_group(
+                g,
+                meta,
+                lambda df: df.filter(f"NOT ({predicate})"),
+                data_change=True,
+                now=now,
             )
-        actions: list[dict] = []
-        if probes:
-            probe = probes[0]
-            for p in probes[1:]:
-                probe = probe.unionByName(p)
-            hit_abs = set()
-            for r in probe.filter(predicate).select("_f").distinct().collect():
-                hit_abs.add(self.fs.normalize(r["_f"]))
-            # match on NORMALIZED full paths: stored paths are table-
-            # relative normally but absolute for shallow-cloned files,
-            # and join passes an absolute second arg through on local FS
-            hit_parts: list[tuple[list[str], dict]] = []
-            thunks = []
-            for key, paths in groups.items():
-                part_values = dict(key)
-                hit = [
-                    p
-                    for p in paths
-                    if self.fs.normalize(_fs.join(self.path, p)) in hit_abs
-                ]
-                if not hit:
-                    continue
-                hit_parts.append((hit, part_values))
-                thunks.append(
-                    lambda hit=hit, pv=part_values: self._rewrite_group(
-                        hit,
-                        pv,
-                        lambda df, pv=pv: inject(df, pv)
-                        .filter(f"NOT ({predicate})")
-                        .drop(*pv.keys()),
-                        data_change=True,
-                        now=now,
-                        read_schema=data_schema,
-                    )
+            for g in _by_partition(hit)
+        ]
+        if cdf and hit:
+            # row-level change feed: the DELETED rows, so readers see
+            # exact deletes instead of the file-level remove+re-add
+            # synthesis.  Scans only the HIT files (every matching row
+            # lives in one by construction) — not a second whole-table
+            # probe
+            deleted = self._scan(hit, meta).filter(predicate)
+            thunks.append(
+                lambda: self._stage_cdc(
+                    deleted.withColumn("_change_type", F.lit("delete"))
                 )
-            if cdf and hit_parts:
-                # row-level change feed: the DELETED rows, so readers
-                # see exact deletes instead of the file-level
-                # remove+re-add synthesis.  Scans only the HIT files
-                # (every matching row lives in one by construction) —
-                # not a second whole-table probe
-                hit_probe = self._hit_frame(hit_parts, data_schema, inject)
-                thunks.append(
-                    lambda: self._stage_cdc(
-                        hit_probe.filter(predicate).withColumn(
-                            "_change_type", F.lit("delete")
-                        )
-                    )
-                )
-            for acts in self._concurrent_stage(thunks):
-                actions.extend(acts)
+            )
+        actions = [a for acts in self._concurrent_stage(thunks) for a in acts]
         return self._commit(actions, operation="DELETE")
 
     def _check_update_assignments(
@@ -3098,18 +2961,16 @@ class DeltaSink:
         (DV the old rows, append only the new) see :meth:`update_dv`."""
         import pyspark.sql.functions as F
 
-        self._require_no_dvs("UPDATE")
+        from .delta_log import prune_by_predicate, snapshot_files
+
         now = int(time.time() * 1000)
         cdf = self._cdf_enabled()
-        types, data_schema = self._data_schema()
+        meta, types, data_schema = self._data_schema()
         gen = self._generated()
         self._check_update_assignments(assignments, types, data_schema, gen)
-        groups = self._partition_groups()
-
-        def inject(df, pv):
-            for c, raw in pv.items():
-                df = df.withColumn(c, F.lit(raw).cast(types.get(c, "string")))
-            return df
+        files = snapshot_files(self.spark, self.path)
+        self._require_no_dvs("UPDATE", files)
+        files = prune_by_predicate(self.path, files, meta, predicate)
 
         def apply_set(df):
             """Hit rows get the new values; __mlk_hit is computed from
@@ -3132,71 +2993,39 @@ class DeltaSink:
                 df = df.withColumns(regen)
             return df
 
-        probes = []
-        for key, paths in groups.items():
-            probes.append(
-                inject(
-                    self._scan_logical(paths, data_schema), dict(key)
-                ).withColumn("_f", F.input_file_name())
-            )
-        if not probes:
+        hit = self._hit_files(files, meta, lambda df: df.filter(predicate))
+        if not hit:
             return self._commit([], operation="UPDATE")
-        probe = probes[0]
-        for p in probes[1:]:
-            probe = probe.unionByName(p)
-        hit_abs = {
-            self.fs.normalize(r["_f"])
-            for r in probe.filter(predicate).select("_f").distinct().collect()
-        }
-        hit_parts: list[tuple[list[str], dict]] = []
-        for key, paths in groups.items():
-            hit = [
-                p
-                for p in paths
-                if self.fs.normalize(_fs.join(self.path, p)) in hit_abs
-            ]
-            if hit:
-                hit_parts.append((hit, dict(key)))
-        if not hit_parts:
-            return self._commit([], operation="UPDATE")
-        hit_probe = self._hit_frame(hit_parts, data_schema, inject)
-        updated = apply_set(hit_probe).filter("__mlk_hit").drop("__mlk_hit")
+        hit_rows = self._scan(hit, meta)
+        updated = apply_set(hit_rows).filter("__mlk_hit").drop("__mlk_hit")
         self._enforce_constraints(updated, "UPDATE")
         mat_rcv = (
             self._rt_mat_cols()[1] if self._rt_enabled() else None
         )
-        actions: list[dict] = []
-        thunks = []
-        for hit, part_values in hit_parts:
 
-            def transform(df, pv=part_values):
-                out = apply_set(inject(df, pv))
-                if mat_rcv and mat_rcv in out.columns:
-                    # updated rows belong to THIS commit: null the
-                    # materialized commit version so reads fall back
-                    # to the new add's defaultRowCommitVersion
-                    out = out.withColumn(
-                        mat_rcv,
-                        F.when(
-                            F.coalesce(F.col("__mlk_hit"), F.lit(False)),
-                            F.lit(None).cast("long"),
-                        ).otherwise(F.col(mat_rcv)),
-                    )
-                return out.drop("__mlk_hit", *pv.keys())
+        def transform(df):
+            out = apply_set(df)
+            if mat_rcv and mat_rcv in out.columns:
+                # updated rows belong to THIS commit: null the
+                # materialized commit version so reads fall back to the
+                # new add's defaultRowCommitVersion
+                out = out.withColumn(
+                    mat_rcv,
+                    F.when(
+                        F.coalesce(F.col("__mlk_hit"), F.lit(False)),
+                        F.lit(None).cast("long"),
+                    ).otherwise(F.col(mat_rcv)),
+                )
+            return out.drop("__mlk_hit")
 
-            thunks.append(
-                lambda hit=hit, pv=part_values, transform=transform:
-                    self._rewrite_group(
-                        hit,
-                        pv,
-                        transform,
-                        data_change=True,
-                        now=now,
-                        read_schema=data_schema,
-                    )
+        thunks = [
+            lambda g=g: self._rewrite_group(
+                g, meta, transform, data_change=True, now=now
             )
+            for g in _by_partition(hit)
+        ]
         if cdf:
-            pre = hit_probe.filter(predicate).withColumn(
+            pre = hit_rows.filter(predicate).withColumn(
                 "_change_type", F.lit("update_preimage")
             )
             post = updated.withColumn(
@@ -3205,8 +3034,7 @@ class DeltaSink:
             thunks.append(
                 lambda: self._stage_cdc(pre.unionByName(post))
             )
-        for acts in self._concurrent_stage(thunks):
-            actions.extend(acts)
+        actions = [a for acts in self._concurrent_stage(thunks) for a in acts]
         return self._commit(actions, operation="UPDATE")
 
     def _old_dv_pairs_df(self, old_payloads: dict[str, bytes]):
@@ -3478,9 +3306,9 @@ class DeltaSink:
         import pyspark.sql.functions as F
 
         from . import dv as _dv
-        from .delta_log import latest_protocol, snapshot_files
+        from .delta_log import latest_protocol, prune_by_predicate, snapshot_files
 
-        types, data_schema = self._data_schema()
+        meta, types, data_schema = self._data_schema()
         if data_schema is None:
             return -1  # empty table: nothing to update
         gen = self._generated()
@@ -3489,45 +3317,20 @@ class DeltaSink:
         cdf = self._cdf_enabled()
         rt = self._rt_enabled()
         mat_id, mat_rcv = self._rt_mat_cols() if rt else (None, None)
-        read_schema = data_schema
-        if rt and (mat_id or mat_rcv):
-            from pyspark.sql.types import LongType, StructField, StructType
-
-            read_schema = StructType(
-                [
-                    *data_schema.fields,
-                    *[
-                        StructField(c, LongType(), True)
-                        for c in (mat_id, mat_rcv)
-                        if c and c not in data_schema.fieldNames()
-                    ],
-                ]
-            )
-        files = snapshot_files(self.spark, self.path)
+        files = prune_by_predicate(
+            self.path, snapshot_files(self.spark, self.path), meta, predicate
+        )
+        if not files:
+            return self._commit([], operation="UPDATE (merge-on-read)")
         by_norm = {
             _fs.data_path_spelling(self.path, f["path"]): f for f in files
         }
         old_pairs = self._old_dv_pairs(files)
         old_descs = self._old_dv_desc_df(files)
-
-        def inject(df, pv):
-            for c, raw in pv.items():
-                df = df.withColumn(c, F.lit(raw).cast(types.get(c, "string")))
-            return df
-
-        groups: dict[tuple, list[str]] = {}
-        for f in files:
-            key = tuple(sorted((f["partitionValues"] or {}).items()))
-            groups.setdefault(key, []).append(f["path"])
-        probes = []
-        for key, paths in groups.items():
-            df = self._scan_logical(paths, read_schema, with_pos=True)
-            probes.append(inject(df, dict(key)))
-        if not probes:
-            return self._commit([], operation="UPDATE (merge-on-read)")
-        probe = probes[0]
-        for pr_ in probes[1:]:
-            probe = probe.unionByName(pr_)
+        # under row tracking the probe already carries every row's id
+        # in the materialized columns — an appended post-update file
+        # must keep them (PROTOCOL.md Row Tracking)
+        probe = self._dv_probe(files, meta, row_ids=rt)
         if old_pairs is not None:
             # single consumer now (the probe anti-join); the bitmap
             # merge reads compressed payloads via old_descs instead of
@@ -3539,19 +3342,10 @@ class DeltaSink:
             packed = self._pack_merged_dvs(matched, old_descs)
             if not packed:
                 return self._commit([], operation="UPDATE (merge-on-read)")
-            # post-update rows: materialize original row ids FIRST (an
-            # appended file must carry them, PROTOCOL.md Row Tracking),
-            # null the materialized commit version, THEN apply the
-            # assignments so every RHS sees the pre-update row
+            # post-update rows keep their original ids; null the
+            # materialized commit version, THEN apply the assignments
+            # so every RHS sees the pre-update row
             post = matched
-            if rt and mat_id:
-                affected = sorted({by_norm[r["_f"]]["path"] for r in packed})
-                post = post.withColumn(
-                    "__mlk_rtfile", F.col("_f")
-                ).withColumn("__mlk_rtridx", F.col("_ridx"))
-                post = self._materialize_row_ids(
-                    post, affected, mat_id, None
-                ).drop("__mlk_rtfile", "__mlk_rtridx")
             if rt and mat_rcv:
                 post = post.withColumn(mat_rcv, F.lit(None).cast("long"))
             # cast every RHS to the column's DECLARED type (SQL UPDATE
@@ -3672,8 +3466,8 @@ class DeltaSink:
         raise (Delta's multiple-source-rows-matched error), delete
         keys must be disjoint from upsert keys, generated columns
         apply, constraints enforce, and the source's column set must
-        equal the target's.  Returns (keys, del_keys, source, types,
-        data_schema)."""
+        equal the target's.  Returns (keys, del_keys, source, meta,
+        data_schema, fill_cols)."""
         import pyspark.sql.functions as F
 
         keys = list(key_cols)
@@ -3729,7 +3523,7 @@ class DeltaSink:
         source = self._apply_defaults(source)
         source = self._apply_generated(source, "MERGE")
         self._enforce_constraints(source, "MERGE")
-        types, data_schema = self._data_schema()
+        meta, types, data_schema = self._data_schema()
         if data_schema is not None:
             # column-set guard: a wider source would write columns the
             # table metadata doesn't record (readers silently drop
@@ -3744,7 +3538,7 @@ class DeltaSink:
                     f"missing={missing} — project the source to the "
                     "target's columns first"
                 )
-        return keys, del_keys, source, types, data_schema, fill_cols
+        return keys, del_keys, source, meta, data_schema, fill_cols
 
     def merge(
         self,
@@ -3779,10 +3573,13 @@ class DeltaSink:
         has no defined order inside one atomic commit."""
         import pyspark.sql.functions as F
 
-        keys, del_keys, source, types, data_schema, fill_cols = (
+        from .delta_log import snapshot_files
+
+        keys, del_keys, source, meta, data_schema, fill_cols = (
             self._prep_merge(source, key_cols, delete_keys)
         )
-        self._require_no_dvs("MERGE")
+        files = snapshot_files(self.spark, self.path)
+        self._require_no_dvs("MERGE", files)
         now = int(time.time() * 1000)
         cdf = self._cdf_enabled()
         if data_schema is None:
@@ -3790,15 +3587,6 @@ class DeltaSink:
             # no-ops — the txn ledger entry must still ride it (I3
             # exactly-once)
             return self.append(source, txn=txn)
-        groups = self._partition_groups()
-
-        def inject(df, pv):
-            for c, raw in pv.items():
-                df = df.withColumn(c, F.lit(raw).cast(types.get(c, "string")))
-            return df
-
-        import urllib.parse
-
         src_keys = source.select(*keys).distinct()
         # probe (and anti-join) on the union of upsert + delete keys:
         # a file holding ONLY deleted rows must still rewrite
@@ -3807,117 +3595,74 @@ class DeltaSink:
             if del_keys is not None
             else src_keys
         )
-        probes = []
-        for key, paths in groups.items():
-            probes.append(
-                inject(
-                    self._scan_logical(paths, data_schema), dict(key)
-                ).withColumn("_f", F.input_file_name())
-            )
-        actions: list[dict] = []
-        thunks = []
-        matched_keys = None
-        hit_probe = None
-        if probes:
-            probe = probes[0]
-            for p in probes[1:]:
-                probe = probe.unionByName(p)
-            hits = probe.join(F.broadcast(all_keys), keys, "inner")
-            hit_abs = set()
-            for r in hits.select("_f").distinct().collect():
-                hit_abs.add(self.fs.normalize(r["_f"]))
-            src_cols = source.columns
-            # row tracking: _rewrite_group materializes the id columns
-            # into the frame; the rewrite must CARRY them — unmatched
-            # rows keep id and commit version, matched (updated) rows
-            # keep their id but reset the materialized commit version
-            # so reads surface the MERGE's commit (same semantics as
-            # update())
-            mat_id, mat_rcv = (
-                self._rt_mat_cols() if self._rt_enabled() else (None, None)
-            )
-            # absolute-path matching (see delete): shallow-cloned files
-            # are stored absolute and must still rewrite copy-on-write
-            hit_parts: list[tuple[list[str], dict]] = []
-            for key, paths in groups.items():
-                part_values = dict(key)
-                hit = [
-                    p
-                    for p in paths
-                    if self.fs.normalize(_fs.join(self.path, p)) in hit_abs
-                ]
-                if not hit:
-                    continue
-                hit_parts.append((hit, part_values))
-                pv = part_values
+        hit = self._hit_files(
+            files,
+            meta,
+            lambda df: df.join(F.broadcast(all_keys), keys, "inner"),
+        )
+        src_cols = source.columns
+        # row tracking: _rewrite_group materializes the id columns into
+        # the frame; the rewrite must CARRY them — unmatched rows keep
+        # id and commit version, matched (updated) rows keep their id
+        # but reset the materialized commit version so reads surface
+        # the MERGE's commit (same semantics as update())
+        mat_id, mat_rcv = (
+            self._rt_mat_cols() if self._rt_enabled() else (None, None)
+        )
 
-                def rewrite(df, pv=pv):
-                    full = inject(df, pv)
-                    rt_cols = [
-                        c
-                        for c in (mat_id, mat_rcv)
-                        if c and c in full.columns
-                    ]
-                    kept = full.join(
-                        F.broadcast(all_keys), keys, "left_anti"
-                    ).select(*src_cols, *rt_cols)
-                    # one output per MATCHED TARGET ROW carrying the
-                    # source's values (Delta's matched-update
-                    # multiplicity).  No forced broadcast: the source
-                    # can be arbitrarily large — AQE broadcasts it only
-                    # when it actually fits.  Columns the source
-                    # OMITTED and the prep default-filled keep the
-                    # TARGET row's value here (UPDATE SET * semantics:
-                    # a default never clobbers stored data)
-                    keep = [
-                        F.col(c).alias(f"__mlk_keep_{c}")
-                        for c in fill_cols
-                    ]
-                    updated = (
-                        full.select(*keys, *rt_cols, *keep)
-                        .join(source, keys, "inner")
-                        .select(
-                            *[
-                                F.col(f"__mlk_keep_{c}").alias(c)
-                                if c in fill_cols
-                                else F.col(c)
-                                for c in src_cols
-                            ],
-                            *rt_cols,
-                        )
-                    )
-                    if mat_rcv and mat_rcv in rt_cols:
-                        updated = updated.withColumn(
-                            mat_rcv, F.lit(None).cast("long")
-                        )
-                    return kept.unionByName(updated).drop(*pv.keys())
-
-                thunks.append(
-                    lambda hit=hit, pv=part_values, rewrite=rewrite:
-                        self._rewrite_group(
-                            hit, pv, rewrite,
-                            data_change=True, now=now,
-                            read_schema=data_schema,
-                        )
+        def rewrite(full):
+            rt_cols = [
+                c for c in (mat_id, mat_rcv) if c and c in full.columns
+            ]
+            kept = full.join(
+                F.broadcast(all_keys), keys, "left_anti"
+            ).select(*src_cols, *rt_cols)
+            # one output per MATCHED TARGET ROW carrying the source's
+            # values (Delta's matched-update multiplicity).  No forced
+            # broadcast: the source can be arbitrarily large — AQE
+            # broadcasts it only when it actually fits.  Columns the
+            # source OMITTED and the prep default-filled keep the
+            # TARGET row's value here (UPDATE SET * semantics: a
+            # default never clobbers stored data)
+            keep = [F.col(c).alias(f"__mlk_keep_{c}") for c in fill_cols]
+            updated = (
+                full.select(*keys, *rt_cols, *keep)
+                .join(source, keys, "inner")
+                .select(
+                    *[
+                        F.col(f"__mlk_keep_{c}").alias(c)
+                        if c in fill_cols
+                        else F.col(c)
+                        for c in src_cols
+                    ],
+                    *rt_cols,
                 )
-            # keys present in ANY affected file = the matched set.
-            # Derived from the HIT files only (every match lives in
-            # one by construction) — downstream consumers (inserts
-            # anti-join, CDF post-image join) then rescan O(files
-            # touched), not the whole table a `hits`-based frame
-            # would re-probe
-            hit_probe = (
-                self._hit_frame(hit_parts, data_schema, inject)
-                if hit_parts
-                else None
             )
-            matched_keys = (
-                hit_probe.join(F.broadcast(all_keys), keys, "inner")
-                .select(*keys)
-                .distinct()
-                if hit_probe is not None
-                else None
+            if mat_rcv and mat_rcv in rt_cols:
+                updated = updated.withColumn(
+                    mat_rcv, F.lit(None).cast("long")
+                )
+            return kept.unionByName(updated)
+
+        thunks = [
+            lambda g=g: self._rewrite_group(
+                g, meta, rewrite, data_change=True, now=now
             )
+            for g in _by_partition(hit)
+        ]
+        # keys present in ANY affected file = the matched set.  Derived
+        # from the HIT files only (every match lives in one by
+        # construction) — downstream consumers (inserts anti-join, CDF
+        # post-image join) then rescan O(files touched), not the whole
+        # table a probe-based frame would re-read
+        hit_rows = self._scan(hit, meta) if hit else None
+        matched_keys = (
+            hit_rows.join(F.broadcast(all_keys), keys, "inner")
+            .select(*keys)
+            .distinct()
+            if hit_rows is not None
+            else None
+        )
         inserts = (
             source.join(matched_keys, keys, "left_anti")
             if matched_keys is not None
@@ -3935,16 +3680,15 @@ class DeltaSink:
             # image), deleted target rows, and the fresh inserts.
             # source ∩ delete_keys = ∅ (guarded above), so joining the
             # source against matched_keys yields exactly the updates.
-            src_cols = source.columns
             ct = "_change_type"
             changes = inserts.select(*src_cols).withColumn(
                 ct, F.lit("insert")
             )
             if matched_keys is not None:
                 # pre-image / delete rows come off the HIT files only
-                # (hit_probe), not a second whole-table probe scan
+                # (hit_rows), not a second whole-table probe scan
                 pre = (
-                    hit_probe.join(F.broadcast(src_keys), keys, "inner")
+                    hit_rows.join(F.broadcast(src_keys), keys, "inner")
                     .select(*src_cols)
                     .withColumn(ct, F.lit("update_preimage"))
                 )
@@ -3954,7 +3698,7 @@ class DeltaSink:
                         for c in fill_cols
                     ]
                     post = (
-                        hit_probe.join(F.broadcast(src_keys), keys, "inner")
+                        hit_rows.join(F.broadcast(src_keys), keys, "inner")
                         .select(*keys, *keepp)
                         .join(source, keys, "inner")
                         .select(
@@ -3976,15 +3720,14 @@ class DeltaSink:
                 changes = changes.unionByName(pre).unionByName(post)
                 if del_keys is not None:
                     changes = changes.unionByName(
-                        hit_probe.join(
+                        hit_rows.join(
                             F.broadcast(del_keys), keys, "inner"
                         )
                         .select(*src_cols)
                         .withColumn(ct, F.lit("delete"))
                     )
             thunks.append(lambda: self._stage_cdc(changes))
-        for acts in self._concurrent_stage(thunks):
-            actions.extend(acts)
+        actions = [a for acts in self._concurrent_stage(thunks) for a in acts]
         if txn is not None:
             # same idempotence contract as append(): the txn action
             # rides the MERGE commit, so a replayed micro-batch can
@@ -4031,7 +3774,7 @@ class DeltaSink:
         from . import dv as _dv
         from .delta_log import latest_protocol, snapshot_files
 
-        keys, del_keys, source, types, data_schema, fill_cols = (
+        keys, del_keys, source, meta, data_schema, fill_cols = (
             self._prep_merge(source, key_cols, delete_keys)
         )
         now = int(time.time() * 1000)
@@ -4042,53 +3785,26 @@ class DeltaSink:
         rt = self._rt_enabled()
         mat_id, mat_rcv = self._rt_mat_cols() if rt else (None, None)
         rt_cols = [c for c in (mat_id, mat_rcv) if c]
-        read_schema = data_schema
-        if rt and rt_cols:
-            from pyspark.sql.types import LongType, StructField, StructType
-
-            read_schema = StructType(
-                [
-                    *data_schema.fields,
-                    *[
-                        StructField(c, LongType(), True)
-                        for c in rt_cols
-                        if c not in data_schema.fieldNames()
-                    ],
-                ]
-            )
         files = snapshot_files(self.spark, self.path)
         by_norm = {
             _fs.data_path_spelling(self.path, f["path"]): f for f in files
         }
         old_pairs = self._old_dv_pairs(files)
         old_descs = self._old_dv_desc_df(files)
-
-        def inject(df, pv):
-            for c, raw in pv.items():
-                df = df.withColumn(c, F.lit(raw).cast(types.get(c, "string")))
-            return df
-
-        groups: dict[tuple, list[str]] = {}
-        for f in files:
-            key = tuple(sorted((f["partitionValues"] or {}).items()))
-            groups.setdefault(key, []).append(f["path"])
         src_keys = source.select(*keys).distinct()
         all_keys = (
             src_keys.unionByName(del_keys).distinct()
             if del_keys is not None
             else src_keys
         )
-        probes = []
-        for key, paths in groups.items():
-            df = self._scan_logical(paths, read_schema, with_pos=True)
-            probes.append(inject(df, dict(key)))
         actions: list[dict] = []
         matched = None
         packed: list = []
-        if probes:
-            probe = probes[0]
-            for pr_ in probes[1:]:
-                probe = probe.unionByName(pr_)
+        if files:
+            # under row tracking the probe carries every row's id in the
+            # materialized columns: an updated row's appended file must
+            # keep it (PROTOCOL.md Row Tracking)
+            probe = self._dv_probe(files, meta, row_ids=rt)
             if old_pairs is not None:
                 # single consumer now (the probe anti-join); the bitmap
                 # merge reads compressed payloads via old_descs, and
@@ -4106,16 +3822,6 @@ class DeltaSink:
             m_rows = None
             if packed:
                 m_rows = matched
-                if rt and mat_id:
-                    affected = sorted(
-                        {by_norm[r["_f"]]["path"] for r in packed}
-                    )
-                    m_rows = m_rows.withColumn(
-                        "__mlk_rtfile", F.col("_f")
-                    ).withColumn("__mlk_rtridx", F.col("_ridx"))
-                    m_rows = self._materialize_row_ids(
-                        m_rows, affected, mat_id, None
-                    ).drop("__mlk_rtfile", "__mlk_rtridx")
                 matched_keys = m_rows.select(*keys).distinct()
                 carry = [c for c in rt_cols if c in m_rows.columns]
                 # one output per matched TARGET row with the SOURCE's
@@ -4316,20 +4022,21 @@ class DeltaSink:
         payloads.  A file whose every row is deleted gets a plain
         remove instead of a DV.  The commit also upgrades the protocol
         to readerVersion 3 + deletionVectors."""
-        import pyspark.sql.functions as F
-
         from . import dv as _dv
-        from .delta_log import snapshot_files
+        from .delta_log import prune_by_predicate, snapshot_files
 
-        types, data_schema = self._data_schema()
+        meta, _types, data_schema = self._data_schema()
         if data_schema is None:
             return -1  # empty table: nothing to delete
         now = int(time.time() * 1000)
-        files = snapshot_files(self.spark, self.path)
-        # file identity key = the same JVM-side spelling the scan
-        # emits (url_decode + file:-scheme strip) — NOT fs.normalize,
-        # whose Hadoop qualification would never match; plain strings
-        # also keep the Arrow closure free of py4j handles
+        files = prune_by_predicate(
+            self.path, snapshot_files(self.spark, self.path), meta, predicate
+        )
+        if not files:
+            return self._commit([], operation="DELETE (merge-on-read)")
+        # file identity key = the spelling read_files carries as
+        # __mlk_file (plain strings also keep the Arrow closure free of
+        # py4j handles)
         by_norm: dict[str, dict] = {
             _fs.data_path_spelling(self.path, f["path"]): f for f in files
         }
@@ -4342,25 +4049,7 @@ class DeltaSink:
         old_pairs = (
             self._old_dv_pairs(files) if self._cdf_enabled() else None
         )
-
-        def inject(df, pv):
-            for c, raw in pv.items():
-                df = df.withColumn(c, F.lit(raw).cast(types.get(c, "string")))
-            return df
-
-        groups: dict[tuple, list[str]] = {}
-        for f in files:
-            key = tuple(sorted((f["partitionValues"] or {}).items()))
-            groups.setdefault(key, []).append(f["path"])
-        probes = []
-        for key, paths in groups.items():
-            df = self._scan_logical(paths, data_schema, with_pos=True)
-            probes.append(inject(df, dict(key)))
-        if not probes:
-            return self._commit([], operation="DELETE (merge-on-read)")
-        probe = probes[0]
-        for pr in probes[1:]:
-            probe = probe.unionByName(pr)
+        probe = self._dv_probe(files, meta)
         matched = probe.filter(predicate).select("_f", "_ridx")
         packed = self._pack_merged_dvs(matched, old_descs)
         cdc_actions = self._delete_dv_cdc(
@@ -4457,80 +4146,24 @@ class DeltaSink:
         rows (dataChange=false — logical content is unchanged, so the
         mirror and the change feed ignore the churn, O2).  After this
         the copy-on-write paths (delete/merge/optimize) work again."""
-        import pyspark.sql.functions as F
+        from .delta_log import snapshot_files
 
-        from . import dv as _dv
-
-        dvs = self._dv_map()
-        if not dvs:
-            return self._commit([], operation="REORG (PURGE)")
-        types, data_schema = self._data_schema()
-        now = int(time.time() * 1000)
-        payloads = [
-            (
-                _fs.data_path_spelling(self.path, p),
-                bytearray(_dv.dv_payload(self.path, d)),
-            )
-            for p, d in dvs.items()
+        dv_files = [
+            f
+            for f in snapshot_files(self.spark, self.path)
+            if (f.get("deletionVector") or {}).get("cardinality")
         ]
-        dv_df = self.spark.createDataFrame(
-            payloads, "_f string, _payload binary"
-        )
-
-        def explode(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                for fpath, payload in zip(pdf["_f"], pdf["_payload"]):
-                    yield pd.DataFrame(
-                        {
-                            "_f": fpath,
-                            "_ridx": _dv.deserialize(bytes(payload)),
-                        }
-                    )
-
-        deleted = dv_df.mapInPandas(explode, "_f string, _ridx long")
-        total = sum(int(d["cardinality"]) for d in dvs.values())
-        if total <= 10_000_000:
-            deleted = F.broadcast(deleted)
-        norm_expr = _fs.spark_scan_path(F.input_file_name())
-        groups = self._partition_groups()
+        if not dv_files:
+            return self._commit([], operation="REORG (PURGE)")
+        # read_files applies each file's deletion vector, so the
+        # rewrite is the identity over the surviving rows
+        meta, _types, _data_schema = self._data_schema()
+        now = int(time.time() * 1000)
         actions: list[dict] = []
-        for key, paths in groups.items():
-            hit = [p for p in paths if p in dvs]
-            if not hit:
-                continue
-
-            def transform(df, _d=deleted):
-                # under row tracking _rewrite_group pre-attaches the
-                # identity (a join consumed _metadata); otherwise read
-                # it straight off the scan
-                if "__mlk_rtridx" in df.columns:
-                    out = df.withColumns(
-                        {
-                            "_f": F.col("__mlk_rtfile"),
-                            "_ridx": F.col("__mlk_rtridx"),
-                        }
-                    )
-                else:
-                    out = df.withColumns(
-                        {
-                            "_f": norm_expr,
-                            "_ridx": F.col("_metadata.row_index"),
-                        }
-                    )
-                return out.join(_d, ["_f", "_ridx"], "left_anti").drop(
-                    "_f", "_ridx"
-                )
-
+        for group in _by_partition(dv_files):
             actions.extend(
                 self._rewrite_group(
-                    hit,
-                    dict(key),
-                    transform,
-                    data_change=False,
-                    now=now,
-                    read_schema=data_schema,
+                    group, meta, lambda df: df, data_change=False, now=now
                 )
             )
         return self._commit(actions, operation="REORG (PURGE)")
@@ -5149,22 +4782,20 @@ class DeltaSink:
         forces a whole-table re-cluster (``OPTIMIZE FULL``)."""
         import math as _math
 
-        from .delta_log import _prune_partitions, latest_metadata, snapshot_files
+        from .delta_log import _prune_partitions, snapshot_files
 
-        self._require_no_dvs("OPTIMIZE")
         if zorder_by is not None and cluster_by is not None:
             raise ValueError(
                 "zorder_by and cluster_by are mutually exclusive"
             )
         if zorder_by is None and cluster_by is None:
             cluster_by = self._clustering_columns()
+        meta, _types, data_schema = self._data_schema()
         if target_file_bytes is None:
             # per-table policy wins over the 128 MB default (K2: the
             # reference sets Kusto merge policies; here the knob lives
-            # in TBLPROPERTIES and the engine honors it).  One metadata
-            # scan, not a properties() + _data_schema() double-read.
-            meta0 = latest_metadata(self.spark, self.path)
-            raw = ((meta0 or {}).get("configuration") or {}).get(
+            # in TBLPROPERTIES and the engine honors it)
+            raw = ((meta or {}).get("configuration") or {}).get(
                 "mlk.optimize.targetFileBytes"
             )
             try:
@@ -5175,7 +4806,6 @@ class DeltaSink:
                     f"an integer: {raw!r} — fix it with set_properties"
                 ) from None
         now = int(time.time() * 1000)
-        _types, data_schema = self._data_schema()
         hilbert = zorder_by is None and bool(cluster_by)
         zcols = list(zorder_by or cluster_by or [])
         if zcols:
@@ -5190,21 +4820,16 @@ class DeltaSink:
                 )
         # one log walk, shared by bounds (stats fold) and the groups
         files = snapshot_files(self.spark, self.path)
+        self._require_no_dvs("OPTIMIZE", files)
         if zcols:
             bounds = self._zorder_bounds(zcols, data_schema, files)
-        if partition_predicate is not None and files:
-            meta = latest_metadata(self.spark, self.path)
-            if meta is not None:
-                files = _prune_partitions(
-                    self.spark, files, meta, partition_predicate
-                )
-        groups: dict[tuple, list[dict]] = {}
-        for f in files:
-            key = tuple(sorted((f["partitionValues"] or {}).items()))
-            groups.setdefault(key, []).append(f)
+        if partition_predicate is not None and files and meta is not None:
+            files = _prune_partitions(
+                self.spark, files, meta, partition_predicate
+            )
         cluster_tag = ",".join(zcols) if hilbert else None
         actions: list[dict] = []
-        for key, files in groups.items():
+        for files in _by_partition(files):
             if hilbert and not full:
                 # INCREMENTAL clustering (the liquid model, and the
                 # 100 TB requirement): files a previous CLUSTER BY
@@ -5258,12 +4883,11 @@ class DeltaSink:
                     return df.coalesce(n)
             actions.extend(
                 self._rewrite_group(
-                    [f["path"] for f in files],
-                    dict(key),
+                    files,
+                    meta,
                     transform,
                     data_change=False,
                     now=now,
-                    read_schema=data_schema,
                     tags={"MLK_CLUSTERED_BY": cluster_tag}
                     if cluster_tag
                     else None,
@@ -5680,20 +5304,8 @@ class DeltaSink:
             dirs[:] = [d for d in dirs if not d.startswith("_")]
             rel_dir = dirpath[len(croot):].strip("/") or "."
             segs = [] if rel_dir == "." else rel_dir.split("/")
-            pv: dict[str, str | None] = {}
             hive = all("=" in s for s in segs)
-            for s in segs if hive else []:
-                k, _, v = s.partition("=")
-                # Spark percent-encodes special chars in hive dir
-                # values and writes nulls as the hive sentinel — undo
-                # both so the log records the REAL values
-                import urllib.parse as _up
-
-                pv[k] = (
-                    None
-                    if v == "__HIVE_DEFAULT_PARTITION__"
-                    else _up.unquote(v)
-                )
+            pv = hive_partition_values(rel_dir) if segs and hive else {}
             for name in sorted(names):
                 if not name.endswith(".parquet") or name.startswith("_"):
                     continue

@@ -531,7 +531,7 @@ _MEMORY = MemoryFS()
 
 
 def spark_scan_path(col):
-    """Spark-side twin of :func:`data_path_spelling`: canonicalize a
+    """Spark-side twin of :func:`scan_path_spelling`: canonicalize a
     scan-time file identity (``input_file_name()`` /
     ``_metadata.file_path``) for equality joins against the
     Python-side spelling.  ``url_decode`` alone is
@@ -549,19 +549,27 @@ def spark_scan_path(col):
     )
 
 
-def data_path_spelling(base: str, rel: str) -> str:
-    """Canonical spelling of data file ``rel`` under table ``base`` for
-    equality against Spark's scan-time file identity
-    (``input_file_name()`` / ``_metadata.file_path``) AFTER both sides
-    are passed through ``url_decode`` + ``regexp_replace('^file:(//)?',
-    '')``: local paths become absolute, ``file:`` schemes drop, other
-    schemes (s3a, abfss, ...) stay."""
+def scan_path_spelling(base: str, rel: str) -> str:
+    """Exactly what :func:`spark_scan_path` yields for a scan of data
+    file ``rel`` under table ``base``: the path the reader opened,
+    absolute, ``file:`` scheme dropped, other schemes (s3a, abfss, ...)
+    kept.  A literal ``%`` in a directory name (Spark escapes ``:`` in
+    partition values as ``%3A``) stays as written."""
     import re as _re
-    import urllib.parse as _up
 
     full = join(base, rel)
     if not scheme_of(full):
-        full = os.path.abspath(full)
-    elif full.startswith("file:"):
-        full = _re.sub(r"^file:/*", "/", full)
-    return _up.unquote(full)
+        return os.path.abspath(full)
+    if full.startswith("file:"):
+        return _re.sub(r"^file:/*", "/", full)
+    return full
+
+
+def data_path_spelling(base: str, rel: str) -> str:
+    """Percent-decoded :func:`scan_path_spelling` — the per-file
+    identity key the deletion-vector and DML paths share (payload
+    frames, ``by_norm`` maps, ``__mlk_file`` from
+    :func:`delta_log.read_files`)."""
+    import urllib.parse as _up
+
+    return _up.unquote(scan_path_spelling(base, rel))

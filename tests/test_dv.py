@@ -326,6 +326,56 @@ def test_delete_dv_partitioned(spark, tmp_path):
     assert got_b == [5, 6, 8, 9]
 
 
+def _scan_nodes(spark, df) -> int:
+    plan = spark._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+    # the formatted explain names every node twice (tree + details)
+    return plan.count("Scan parquet") // 2
+
+
+def test_read_snapshot_is_one_scan_across_tuples(spark, tmp_path):
+    """12 partition tuples, row tracking on and one DV'd file: the
+    snapshot plans ONE parquet scan — partition values, row ids and
+    the deletion vector all join onto it per file."""
+    sink = DeltaSink(spark, str(tmp_path / "t"), partition_by=["p"])
+    sink.append(
+        spark.range(48).selectExpr("id", "id % 12 AS p").repartition(1)
+    )
+    sink.set_properties({"delta.enableRowTracking": "true"})
+    sink.delete_dv("id = 5")
+    files = DL.snapshot_files(spark, sink.path)
+    assert len({f["partitionValues"]["p"] for f in files}) == 12
+    assert sum(1 for f in files if f.get("deletionVector")) == 1
+    df = DL.read_snapshot(spark, sink.path, row_ids=True)
+    assert _scan_nodes(spark, df) == 1
+    rows = df.collect()
+    assert sorted(r.id for r in rows) == [i for i in range(48) if i != 5]
+    assert all(r.p == r.id % 12 for r in rows)
+    assert len({r._row_id for r in rows}) == 47
+
+
+def test_read_snapshot_single_tuple_types(spark, tmp_path):
+    """A table with ONE partition tuple reads through the same per-file
+    join: partition values come back typed (cast from the log strings)
+    next to the data columns."""
+    import datetime
+
+    sink = DeltaSink(spark, str(tmp_path / "t"), partition_by=["d", "k"])
+    sink.append(
+        spark.sql(
+            "SELECT id, DATE'2024-03-05' AS d, CAST(7 AS int) AS k "
+            "FROM range(3)"
+        )
+    )
+    df = DL.read_snapshot(spark, sink.path)
+    assert df.dtypes == [("id", "bigint"), ("d", "date"), ("k", "int")]
+    assert _scan_nodes(spark, df) == 1
+    assert sorted(tuple(r) for r in df.collect()) == [
+        (i, datetime.date(2024, 3, 5), 7) for i in range(3)
+    ]
+
+
 def test_dv_survives_checkpoint_and_vacuum(spark, tmp_path):
     """A checkpoint written on a DV table must carry the vectors and
     the upgraded protocol — after vacuum truncates the JSON history,

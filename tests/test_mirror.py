@@ -140,6 +140,72 @@ def test_partitioned_delete(spark, tmp_path):
     assert out.filter("year = 2021").count() == 0
 
 
+def test_partitioned_lineage_spelling_through_removes(spark, tmp_path):
+    """MLK_BlobPath spelling through staging AND removes: partition
+    values with a space, a ':' (Spark escapes it, so the directory is
+    literally ``p=x%3Ay``) and null.  A copy-on-write delete and a
+    merge-on-read delete on the source both reach the target."""
+    p = _mk(spark, tmp_path, "plin", on_dv="materialize")
+    src = DeltaSink(spark, p.source, partition_by=["p"])
+    src.append(
+        spark.range(30).selectExpr(
+            "id", "CASE id % 3 WHEN 0 THEN 'a b' WHEN 1 THEN 'x:y' END AS p"
+        )
+    )
+    p.run_until_idle()
+    src.delete("id IN (3, 4)")
+    src.delete_dv("id IN (6, 7, 8)")
+    p.run_until_idle()
+
+    def rows(df):
+        return sorted(
+            (r["id"], r["p"]) for r in df.collect()
+        )
+
+    expect = [
+        (i, ["a b", "x:y", None][i % 3])
+        for i in range(30)
+        if i not in (3, 4, 6, 7, 8)
+    ]
+    assert rows(DL.read_snapshot(spark, p.source)) == expect
+    out = p.mirror_df()
+    assert rows(out) == expect
+    # every mirrored row names a LIVE source file, spelled as removes
+    # key on it
+    live = {
+        p._lineage_path(f["path"])
+        for f in DL.snapshot_files(spark, p.source)
+    }
+    assert {r["MLK_BlobPath"] for r in out.collect()} == live
+
+
+def test_staged_schema_does_not_depend_on_batch_shape(spark, tmp_path):
+    """A one-file batch and a batch of several files (several partition
+    tuples) stage the same schema: the target records its metaData once,
+    at creation, and never again."""
+    p = _mk(spark, tmp_path, "shape")
+    src = DeltaSink(spark, p.source, partition_by=["p"])
+    def rows(ids):
+        return spark.createDataFrame(
+            [(i, str(i % 3)) for i in ids], "id long, p string"
+        )
+
+    src.append(rows([0, 3, 6]).coalesce(1))
+    src.set_properties({"delta.enableRowTracking": "true"})
+    assert len(DL.snapshot_files(spark, p.source)) == 1
+    p.run_until_idle()
+    first = DL.list_commit_versions(p.sink.path)[-1]
+    src.append(rows([1, 2, 4, 5, 7, 8, 9, 10, 11]))
+    p.run_until_idle()
+    later = [v for v in DL.list_commit_versions(p.sink.path) if v > first]
+    assert later
+    for v in later:
+        assert not any("metaData" in a for a in DL._read_commit(p.sink.path, v))
+    out = p.mirror_df()
+    assert _ids(out) == list(range(12))
+    assert out.filter("MLK_SourceRowId IS NULL").count() == 0
+
+
 def test_go_back_with_creation_time(spark, tmp_path):
     """go-back retention: partitions whose creation-time expression
     predates the cutoff are never ingested, and their later removes are

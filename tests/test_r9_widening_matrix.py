@@ -121,6 +121,75 @@ def test_chain_into_decimal_era_split(spark, tmp_path):
     assert rows == {1: "5.00", 2: "123456.00", 3: "9.75"}
 
 
+_ERA_OPS = [
+    "delete",
+    "delete_dv",
+    "update",
+    "update_dv",
+    "merge",
+    "merge_dv",
+    "optimize",
+    "reorg",
+    "read_changes",
+]
+
+
+@pytest.mark.parametrize("op", _ERA_OPS)
+def test_byte_to_decimal_era_split_every_reader(spark, tmp_path, op):
+    """byte -> decimal(6,2): Spark promotes a narrow parquet INT32 to a
+    decimal only when the decimal has >= 10 integer digits, so the
+    byte-era file is readable ONLY through the era-split.  Every DML
+    probe and rewrite, OPTIMIZE, REORG and the change feed read data
+    files through the same primitive as read_snapshot, so each of them
+    must see the byte era promoted."""
+    sink = DeltaSink(spark, str(tmp_path / "t"))
+    # ONE byte-era file, so every rewrite must decode its v column
+    v0 = sink.append(
+        spark.sql(
+            "SELECT id, CAST(id AS tinyint) AS v FROM range(1, 4)"
+        ).coalesce(1)
+    )
+    if op == "reorg":
+        # the deletion vector lands on the byte-era file BEFORE the
+        # widening, so only the purge itself reads across eras
+        sink.delete_dv("id = 3")
+    sink.widen_column("v", "decimal(6,2)")
+    sink.append(spark.sql("SELECT 4 AS id, CAST(9.75 AS decimal(6,2)) AS v"))
+    base = {1: "1.00", 2: "2.00", 3: "3.00", 4: "9.75"}
+    source = spark.sql(
+        "SELECT CAST(2 AS bigint) AS id, CAST(2.5 AS decimal(6,2)) AS v "
+        "UNION ALL "
+        "SELECT CAST(5 AS bigint) AS id, CAST(0.25 AS decimal(6,2)) AS v"
+    )
+    if op == "read_changes":
+        rows = DL.read_changes(spark, sink.path, v0).collect()
+        got = sorted((r.id, str(r.v), r._change_type) for r in rows)
+        assert got == [(i, base[i], "insert") for i in (1, 2, 3, 4)]
+        return
+    if op in ("delete", "delete_dv"):
+        getattr(sink, op)("v = 2")
+        expect = {k: v for k, v in base.items() if k != 2}
+    elif op in ("update", "update_dv"):
+        getattr(sink, op)("v = 2", {"v": "v + 0.5"})
+        expect = {**base, 2: "2.50"}
+    elif op in ("merge", "merge_dv"):
+        getattr(sink, op)(source, ["id"])
+        expect = {**base, 2: "2.50", 5: "0.25"}
+    elif op == "optimize":
+        sink.optimize()
+        expect = base
+    else:
+        sink.reorg()
+        assert not any(
+            f.get("deletionVector")
+            for f in DL.snapshot_files(spark, sink.path)
+        )
+        expect = {k: v for k, v in base.items() if k != 3}
+    df = DL.read_snapshot(spark, sink.path)
+    assert dict(df.dtypes)["v"] == "decimal(6,2)"
+    assert {r.id: str(r.v) for r in df.collect()} == expect
+
+
 def test_mirror_follows_byte_to_decimal_widen(spark, tmp_path):
     """The mirror's on_schema_change='widen' follow path stages
     byte-era SOURCE files under a decimal schema via the same
